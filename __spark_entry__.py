@@ -3702,7 +3702,7 @@ def _x_semantic_dedup(spark, sf_dir):
     emb = _tbl(spark, sf_dir, "embeddings")
     pairs = embedding_neardup(emb, threshold=0.4, exact=True)
     comp = connected_components(pairs, "a", "b")
-    losers = comp.filter(F.col("node") != F.col("comp")).select(
+    losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("vec_id")
     )
     return emb.join(losers, "vec_id", "left_anti").select("vec_id", "label")

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from prql_query_spark.engine.session import barrier
@@ -75,14 +75,6 @@ def _spread(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
 
-    def _size_suffix(v: str) -> int:
-        v = v.strip().lower()
-        for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                          ("b", 1)):
-            if v.endswith(suf):
-                return int(float(v[: -len(suf)]) * mult)
-        return int(v)
-
     try:
         files = df.inputFiles()
     except Exception:
@@ -97,10 +89,11 @@ def _spread(df: DataFrame) -> DataFrame:
             break
     if sizes:
         total = sum(sizes)
-        maxpb = _size_suffix(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-        open_cost = _size_suffix(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4m"))
+        # Spark's own getters parse every byte-string form it accepts
+        # ('128m', '128MB', '4mb', plain bytes)
+        conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        maxpb = conf.filesMaxPartitionBytes()
+        open_cost = conf.filesOpenCostInBytes()
         if math.ceil(total / maxpb) >= target:
             return df  # provably already >= target scan partitions
         bytes_per_core = (total + len(sizes) * open_cost) / max(target, 1)
@@ -438,7 +431,14 @@ def _band_pairs_exploded(banded: DataFrame, max_bucket: int | None) -> DataFrame
     # — scale-adaptive via tune_session_for (cores at CLI scale, input-
     # proportional on a cluster) — and the groupBy on the same keys
     # reuses it, so the exchange count is unchanged.
-    n_parts = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # A non-integer value (e.g. 'auto' on managed platforms) falls back to
+    # the core count.
+    spark = banded.sparkSession
+    try:
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        n_parts = spark.sparkContext.defaultParallelism
+    # a != b: duplicate ids in one bucket would otherwise emit self-pairs
     return (
         banded.repartition(n_parts, "_band", "_bucket")
         .groupBy("_band", "_bucket")
@@ -446,6 +446,7 @@ def _band_pairs_exploded(banded: DataFrame, max_bucket: int | None) -> DataFrame
         .filter(F.size("_ids") > 1)
         .select(F.explode(pair_structs).alias("_p"))
         .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+        .filter(F.col("a") != F.col("b"))
     )
 
 
@@ -834,55 +835,65 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) labeling of the undirected graph given as edge pairs.
 
-    Large-star/small-star-style label propagation expressed purely as
+    Min-label propagation plus pointer jumping, expressed purely as
     DataFrame ops: every node repeatedly adopts the minimum label in its
-    neighborhood (including its own) until a fixed point.  Each iteration is
-    one shuffle (groupBy node); convergence needs O(graph diameter)
-    iterations — near-dup graphs are shallow (dups of dups of the same doc),
-    so this terminates in a handful of rounds.  The component id is the
-    minimum node id in the component (deterministic).
+    neighborhood (including its own) until a fixed point.  Each round is
+    one shuffle (groupBy node); convergence needs O(graph diameter) rounds
+    without pointer jumping and O(log diameter) with it — near-dup graphs
+    are shallow (dups of dups of the same doc), so this terminates in a
+    handful of rounds.  The component id is the minimum node id in the
+    component (deterministic).  Duplicate edges and self-loops are allowed.
 
-    localCheckpoint() truncates the lineage each round so the plan doesn't
-    grow exponentially across iterations; at cluster scale swap for
-    checkpoint() on durable storage.
+    Each round ends on one eager barrier that truncates the lineage; the
+    changed-label count rides that barrier's job as an Observation.
     """
-    # edges are loop-INVARIANT but referenced by every iteration's join:
-    # without materializing them once, the entire upstream pipeline that
-    # produced `pairs` (for minhash_dedup_cc: signatures -> banding ->
-    # shingle verify) re-executes per iteration — measured 18.9 s vs 6.2 s
-    # end-to-end at sf0.1 (same class of bug as pagerank's round-2
-    # per-iteration recompute fix)
+    # One scan of `pairs` yields both edge directions (no distinct(): a
+    # duplicate edge cannot change a minimum).  The barrier keeps every
+    # round from re-running the pipeline behind `pairs` (minhash_dedup_cc
+    # at sf0.1: 18.9 s vs 6.2 s end-to-end).
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
+        pairs.select(F.explode(F.array(
+            F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+            F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
+        )).alias("_e"))
+        .select("_e.src", "_e.dst")
         .transform(barrier)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .transform(barrier)
-    )
+
+    def settle(labels: DataFrame, changed: Column) -> tuple[DataFrame, int]:
+        # barrier() must stay eager: an Observation on a lazy checkpoint
+        # followed by a separate action reads 0 changed labels
+        obs = Observation()
+        labels = (labels.observe(obs, F.count_if(changed).alias("n"))
+                  .select("node", "comp").transform(barrier))
+        return labels, obs.get["n"]
+
+    # Round 0 needs no join: every node starts labelled by itself, so its
+    # first label is least(self, min neighbor) straight off the edges.
+    labels, n_changed = settle(
+        edges.groupBy("src")
+        .agg(F.least("src", F.min("dst")).alias("comp"))
+        .withColumnRenamed("src", "node"),
+        F.col("comp") != F.col("node"))
     # Pointer jumping (comp -> comp(comp)) doubles label reach per round —
     # O(log diameter) on chains — but costs an extra self-join every
     # round.  Near-dup graphs converge in ~2 rounds with or without it
-    # (interleaved at sf0.1: 2 iterations both ways, 0.87 s vs 1.30 s),
-    # so the jump join only switches on from round `ptr_jump_after`+1:
-    # shallow graphs (the common case) never pay it, pathological chains
-    # still get the logarithmic asymptotics after the grace rounds.
+    # (interleaved at sf0.1: 2 rounds both ways, 0.87 s vs 1.30 s), so the
+    # jump join only switches on from round `ptr_jump_after`: shallow
+    # graphs (the common case) never pay it, pathological chains still get
+    # the logarithmic asymptotics after the grace rounds.
     comp_type = labels.schema["comp"].dataType
-    for it in range(max_iter):
+    for it in range(1, max_iter):
+        if n_changed == 0:
+            break
         # min label over {self} ∪ neighbors, one shuffle.  The self rows
-        # carry their current label along as _old so the convergence
-        # check below is a flag filter over the checkpointed result — the
-        # previous new⋈old shuffle join per iteration (round-11) is gone.
+        # carry their current label along as _old for the change count.
         neighbor_labels = (
             edges.join(labels, edges.dst == labels.node)
             .select(F.col("src").alias("node"), F.col("comp"),
                     F.lit(None).cast(comp_type).alias("_old"))
         )
-        min_labels = (
+        new_labels = (
             labels.select("node", "comp", F.col("comp").alias("_old"))
             .union(neighbor_labels)
             .groupBy("node")
@@ -890,31 +901,18 @@ def connected_components(
                  F.max("_old").alias("_old"))
         )
         if it >= ptr_jump_after:
-            mapping = min_labels.select(
+            mapping = new_labels.select(
                 F.col("node").alias("m_node"), F.col("comp").alias("m_comp")
             )
             new_labels = (
-                min_labels.join(
-                    mapping, min_labels.comp == mapping.m_node, "left")
+                new_labels.join(
+                    mapping, new_labels.comp == mapping.m_node, "left")
                 .select(
-                    "node",
-                    F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp"),
-                    (F.coalesce(F.col("m_comp"), F.col("comp"))
-                     != F.col("_old")).alias("_chg"),
-                )
-                .transform(barrier)
+                    "node", "_old",
+                    F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp"))
             )
-        else:
-            new_labels = (
-                min_labels.select(
-                    "node", "comp",
-                    (F.col("comp") != F.col("_old")).alias("_chg"))
-                .transform(barrier)
-            )
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.select("node", "comp")
-        if changed == 0:
-            break
+        labels, n_changed = settle(
+            new_labels, F.col("comp") != F.col("_old"))
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 

@@ -304,11 +304,12 @@ def contamination(
             F.lower(F.col(tc)), F.lit("[a-z0-9]+"), F.lit(0)
         )
         # materialize the token array first: HOFs are interpreted and
-        # would re-run the regexp per n-gram position otherwise
-        ng = F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
-        )
+        # would re-run the regexp per n-gram position otherwise.  One
+        # parsed SQL string, not a py4j lambda Column (construction time on
+        # every query build).
+        ng = F.expr(
+            f"transform(sequence(1, size(_toks) - {n - 1}), "
+            f"i -> concat_ws(' ', slice(_toks, i, {n})))")
         out = (
             df.select(F.col(idc), toks.alias("_toks"))
             .filter(F.size("_toks") >= n)
@@ -481,7 +482,7 @@ def gopher_audit(df: DataFrame, text_col: str = "text", **overrides) -> DataFram
         )
         .withColumn(
             "max_word_len",
-            F.aggregate(toks, F.lit(0), lambda a, x: F.greatest(a, F.length(x))),
+            F.expr("aggregate(_toks, 0, (a, x) -> greatest(a, length(x)))"),
         )
         .withColumn(
             "dup_frac",

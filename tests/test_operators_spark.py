@@ -408,6 +408,100 @@ def test_connected_components_chain_and_clique(spark):
     assert got == want
 
 
+def _union_find_components(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in list(parent)}
+
+
+def _cc_graphs():
+    import random
+
+    rng = random.Random(17)
+    return {
+        "chain200": [(i, i + 1) for i in range(199)],
+        "reversed_chain64": [(i + 1, i) for i in reversed(range(63))],
+        "cliques20x6": [(10 * c + i, 10 * c + j) for c in range(20)
+                        for i in range(6) for j in range(i + 1, 6)],
+        "dup_edges_self_loops": [(1, 2), (2, 1), (1, 2), (3, 3), (2, 3),
+                                 (5, 5), (7, 8), (8, 7), (8, 7)],
+        "random250": [(rng.randrange(300), rng.randrange(300))
+                      for _ in range(250)],
+    }
+
+
+def _assert_cc_matches_union_find(spark):
+    from prql_query_spark.operators.dedup import connected_components
+
+    for name, edges in _cc_graphs().items():
+        df = spark.createDataFrame(edges, "a bigint, b bigint")
+        got = {(r.node, r.component)
+               for r in connected_components(df).collect()}
+        assert got == _union_find_components(edges), name
+
+
+def test_connected_components_matches_union_find(spark):
+    _assert_cc_matches_union_find(spark)
+
+
+def test_connected_components_reliable_checkpoint(spark, tmp_path):
+    """Same graphs with a checkpoint dir set: every barrier becomes a
+    reliable checkpoint() and the change count must ride it too."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        _assert_cc_matches_union_find(spark)
+    finally:
+        # PySpark has no unset; clear the JVM field so later barriers in
+        # the shared session go back to localCheckpoint
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
+
+
+def _group_actions(spark, group):
+    """Action name of every SQL execution that ran a job of ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for k in range(execs.size()):
+        e = execs.apply(k)
+        if any(e.jobs().contains(j) for j in jobs):
+            out.append(e.description().split(" at ")[0])
+    return out
+
+
+def test_connected_components_convergence_rides_barrier(spark):
+    """A two-round graph runs three barrier actions (edges, round 0,
+    round 1) and no separate convergence count."""
+    from prql_query_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1, 2), (1, 3)], "a bigint, b bigint")
+    # the group alone, no description: executions keep their call site
+    sc.setLocalProperty("spark.jobGroup.id", "cc-two-rounds")
+    try:
+        out = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _group_actions(spark, "cc-two-rounds") == ["localCheckpoint"] * 3
+    assert {(r.node, r.component) for r in out.collect()} == {
+        (1, 1), (2, 1), (3, 1)}
+
+
 def test_minhash_dedup_cc_transitive(spark):
     from prql_query_spark.operators.dedup import minhash_dedup_cc
 
@@ -420,6 +514,62 @@ def test_minhash_dedup_cc_transitive(spark):
     out = minhash_dedup_cc(df, threshold=0.5, num_perm=32, bands=16)
     ids = {r.doc_id for r in out.select("doc_id").collect()}
     assert ids == {1, 4}
+
+
+def test_spread_accepts_byte_string_confs(spark, sf_dir):
+    """'128MB' / '4mb' are valid Spark byte strings; _spread must read them
+    through Spark's own parser instead of crashing query construction."""
+    from prql_query_spark.operators.dedup import _spread
+
+    keys = {"spark.sql.files.maxPartitionBytes": "128MB",
+            "spark.sql.files.openCostInBytes": "4mb"}
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        docs = load_parquet(spark, f"{sf_dir}/documents.parquet")
+        assert _spread(docs).count() == docs.count()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _banded(spark, rows):
+    return spark.createDataFrame(rows, "_band int, _bucket bigint, _id bigint")
+
+
+def test_band_pairs_drop_duplicate_id_self_pairs(spark):
+    from prql_query_spark.operators.dedup import _band_pairs_exploded
+
+    banded = _banded(spark, [(0, 7, 1), (0, 7, 1), (0, 7, 2), (1, 9, 3),
+                             (1, 9, 3)])
+    got = sorted((r.a, r.b) for r in _band_pairs_exploded(banded, None).collect())
+    assert got == [(1, 2), (1, 2)]
+
+
+def test_band_pairs_non_integer_shuffle_partitions(spark, monkeypatch):
+    """A non-integer spark.sql.shuffle.partitions (e.g. 'auto' on managed
+    platforms; OSS Spark rejects it at set time) falls back to the core
+    count instead of failing query construction."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from prql_query_spark.operators.dedup import _band_pairs_exploded
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kw):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kw)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    banded = _banded(spark, [(0, 7, 1), (0, 7, 2), (0, 7, 3)])
+    pairs = _band_pairs_exploded(banded, None)
+    monkeypatch.undo()
+    assert sorted((r.a, r.b) for r in pairs.collect()) == [(1, 2), (1, 3), (2, 3)]
 
 
 def test_asof_join_semantics(spark):
