@@ -47,62 +47,31 @@ def _reg(spark: SparkSession, sf_dir: str) -> None:
     sf_dir = os.path.abspath(sf_dir)
     if _REG_CURRENT.get(app) == sf_dir:
         return
-    from prql_query_spark.engine.sources import load_parquet
+    from prql_query_spark.engine.sources import register_sources
 
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            load_parquet(spark, path).createOrReplaceTempView(t)
+    paths = {t: os.path.join(sf_dir, f"{t}.parquet") for t in TABLES}
+    register_sources(spark, [f"{t}={p}" for t, p in paths.items()
+                             if os.path.exists(p)])
     _REG_CURRENT[app] = sf_dir
 
 
-_SCHEMA_CACHE: dict = {}
-
-
-def _catalog(
-    sf_dir: str,
-) -> tuple[dict[str, list], dict[str, int], dict[str, int]]:
-    """(table -> column names, table -> row count, table -> bytes) for the
-    sf_dir parquet, feeding the compiler's schema-dependent rewrites
-    (eager aggregation and its reduction + broadcast-regime cost gates).
-    Read straight from the parquet footers (no Spark); cached per dir."""
-    import pyarrow.parquet as papq
-
-    sf_dir = os.path.abspath(sf_dir)
-    if sf_dir not in _SCHEMA_CACHE:
-        schemas: dict[str, list] = {}
-        rows: dict[str, int] = {}
-        nbytes: dict[str, int] = {}
-        for t in TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if not os.path.exists(path):
-                continue
-            if os.path.isdir(path):
-                parts = sorted(
-                    os.path.join(path, f) for f in os.listdir(path)
-                    if f.endswith(".parquet"))
-                if not parts:
-                    continue
-                schemas[t] = papq.read_schema(parts[0]).names
-                rows[t] = sum(
-                    papq.ParquetFile(p).metadata.num_rows for p in parts)
-                nbytes[t] = sum(os.path.getsize(p) for p in parts)
-            else:
-                pf = papq.ParquetFile(path)
-                schemas[t] = pf.schema_arrow.names
-                rows[t] = pf.metadata.num_rows
-                nbytes[t] = os.path.getsize(path)
-        _SCHEMA_CACHE[sf_dir] = (schemas, rows, nbytes)
-    return _SCHEMA_CACHE[sf_dir]
-
-
-def _schemas(spark: SparkSession, sf_dir: str) -> dict[str, list]:
-    return _catalog(sf_dir)[0]
+_CATALOG_CACHE: dict = {}
 
 
 def _compile_kwargs(sf_dir: str) -> dict:
-    schemas, rows, nbytes = _catalog(sf_dir)
-    return {"schemas": schemas, "table_rows": rows, "table_bytes": nbytes}
+    """compile_prql catalog keywords for the sf_dir parquet, read from the
+    footers (no Spark) and cached per dir."""
+    from prql_query_spark.engine.sources import source_catalog
+
+    sf_dir = os.path.abspath(sf_dir)
+    if sf_dir not in _CATALOG_CACHE:
+        _CATALOG_CACHE[sf_dir] = source_catalog(
+            [(t, os.path.join(sf_dir, f"{t}.parquet"), None) for t in TABLES])
+    return dict(_CATALOG_CACHE[sf_dir])
+
+
+def _schemas(spark: SparkSession, sf_dir: str) -> dict[str, list]:
+    return _compile_kwargs(sf_dir)["schemas"]
 
 
 _TBL_CACHE: dict = {}
@@ -2167,8 +2136,9 @@ SELECT MIN(doc_id) AS rep_doc, COUNT(*) AS n_docs FROM c GROUP BY ck
 """
 
 # Exact 5-shingle Jaccard on adjacent-id pairs; shingle construction is a
-# list comprehension mirror of dedup.shingles() (substr windows, lowered,
-# distinct; len<k degenerates to one truncated shingle in both engines).
+# list comprehension mirror of dedup's shingle kernel (substr windows,
+# lowered, distinct; len<k degenerates to one truncated shingle in both
+# engines).
 EXTENSION_ORACLES["x_ngram_jaccard"] = """
 WITH sh AS (
     SELECT doc_id,

@@ -521,7 +521,7 @@ take 10
     # round-6 closure of the q_agg 2.14x question (VERDICT r5 item 3):
     # the one untried lever was the DataSource-v2 parquet reader, whose
     # scan-task setup differs from the profiled v1 path.  Measured
-    # (tools/probe_v2_reader.py, interleaved 9-run medians, BOTH
+    # (retired interleaved probe, 9-run medians — SCALING.md, BOTH
     # layouts): v2 is same-or-slower everywhere — q_agg 254.7 -> 261.8 ms
     # primary / 174.5 -> 176.9 ms compacted; q_take and q_filter_derive
     # agree.  Together with the profile_floor decomposition (SCALING.md
@@ -546,7 +546,7 @@ take 10
     if samerun_excluded:
         full["samerun_excluded"] = samerun_excluded
     full["q_agg_floor_note"] = (
-        "v2-reader A/B (tools/probe_v2_reader.py, 9-run interleaved "
+        "v2-reader A/B (SCALING.md retired probes, 9-run interleaved "
         "medians, sf0.1): q_agg v1 254.7ms / v2 261.8ms primary, "
         "v1 174.5ms / v2 176.9ms compacted — v2 same-or-slower at both "
         "layouts; residual over the 2.0x bar is the measured constant "

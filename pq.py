@@ -141,25 +141,22 @@ def main(argv: list[str] | None = None) -> int:
                 return 1
 
     from prql_query_spark import compile_prql
-    from prql_query_spark.engine.sources import auto_from, split_alias, table_name_for
+    from prql_query_spark.engine.sources import auto_from, standardise_sources
 
     # ---- auto-from + transpile-only path (main.rs:144-150, 229-231)
-    source_names = [table_name_for(p, a) for a, p in (split_alias(s) for s in frm)]
-    if not use_sql and source_names:
-        query = auto_from(query, source_names[-1])
-
-    if use_sql:
-        sql = query
-    else:
-        sql = compile_prql(query, dialect="spark")
+    sources = standardise_sources(frm)
+    if not use_sql and sources:
+        query = auto_from(query, sources[-1][0])
 
     if args.no_exec or (not database and not frm and not use_sql):
-        print(sql)
+        print(query if use_sql else compile_prql(query, dialect="spark"))
         return 0
 
     # ---- execution
     from prql_query_spark.engine import PrqlEngine
-    from prql_query_spark.engine.session import get_spark
+    from prql_query_spark.engine.session import (
+        get_spark, sources_bytes, tune_session_for,
+    )
     from prql_query_spark.engine.writers import (
         write_distributed, write_pretty, write_single_file,
     )
@@ -172,17 +169,12 @@ def main(argv: list[str] | None = None) -> int:
 
         attach_database(spark, database)
     eng.add_sources(frm, schema=args.schema)
-    from prql_query_spark.engine.session import sources_bytes, tune_session_for
-
-    paths = [s.split("=", 1)[1] if "=" in s else s for s in frm]
-    tune_session_for(spark, sources_bytes(paths))
-    if not use_sql:
-        # recompile now that the sources are registered: the catalog
-        # (columns + parquet row counts) enables schema-dependent rewrites
-        # (eager aggregation); the transpile-only path above stays plain
-        schemas, rows, nbytes = eng.catalog()
-        sql = compile_prql(query, dialect="spark", schemas=schemas or None,
-                           table_rows=rows, table_bytes=nbytes)
+    tune_session_for(spark, sources_bytes([p for _, p in sources if p]))
+    # compiled once, against the registered sources: the catalog (columns
+    # + parquet stats) enables schema-dependent rewrites (eager
+    # aggregation); the transpile-only path above stays plain
+    sql = query if use_sql else compile_prql(
+        query, dialect="spark", **eng.catalog())
     df = eng.sql(sql)
 
     if args.explain:

@@ -2,19 +2,18 @@
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from prql_query_spark.compiler import compile_prql
 from prql_query_spark.engine.session import get_spark
 from prql_query_spark.engine.sources import (
     auto_from,
-    register_dir,
     register_sources,
+    source_catalog,
 )
 
-__all__ = ["PrqlEngine", "get_spark", "register_dir", "register_sources"]
+__all__ = ["PrqlEngine", "get_spark", "register_sources"]
 
 
 class PrqlEngine:
@@ -24,59 +23,35 @@ class PrqlEngine:
 
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
-        self.source_names: list[str] = []
-        self.source_paths: dict[str, str] = {}  # view name -> file path
+        # view name -> (path, registered DataFrame), latest registration
+        # last; both None for a passthrough table that already exists
+        self.sources: dict[str, tuple[str | None, DataFrame | None]] = {}
 
     def add_sources(self, sources: list[str], schema: str | None = None) -> None:
-        from prql_query_spark.engine.sources import split_alias, table_name_for
+        for name, path, df in register_sources(self.spark, sources, schema=schema):
+            self.sources.pop(name, None)
+            self.sources[name] = (path, df)
 
-        names = register_sources(self.spark, sources, schema=schema)
-        self.source_names.extend(names)
-        for src in sources:
-            alias, path = split_alias(src)
-            name = table_name_for(path, alias)
-            if name in names:
-                self.source_paths[name] = path
-
-    def add_dir(self, sf_dir: str) -> None:
-        names = register_dir(self.spark, sf_dir)
-        self.source_names.extend(names)
-        for n in names:
-            p = os.path.join(sf_dir, f"{n}.parquet")
-            if os.path.exists(p):
-                self.source_paths[n] = p
-
-    def catalog(self) -> tuple[dict[str, list], dict[str, int], dict[str, int]]:
-        """(table -> columns, table -> row count, table -> bytes) for the
-        registered sources, feeding the compiler's schema-dependent
-        rewrites (eager aggregation and its reduction/broadcast-regime
-        cost gates).  Columns come from the session catalog; row counts
-        and sizes only from parquet files — a source without cheap exact
-        stats is simply absent, which makes the cost gates hold the
-        rewrite back (conservative by construction)."""
-        schemas: dict[str, list] = {}
-        rows: dict[str, int] = {}
-        nbytes: dict[str, int] = {}
-        for n in self.source_names:
-            try:
-                schemas[n] = self.spark.table(n).columns
-            except Exception:
-                continue
-            path = self.source_paths.get(n)
-            if path and path.endswith(".parquet") and os.path.isfile(path):
-                import pyarrow.parquet as papq
-
-                rows[n] = papq.ParquetFile(path).metadata.num_rows
-                nbytes[n] = os.path.getsize(path)
-        return schemas, rows, nbytes
+    def catalog(self) -> dict[str, dict]:
+        """`compile_prql` catalog keywords for the registered sources
+        (sources.source_catalog).  Columns come from the DataFrames
+        registration built; a passthrough table is looked up in the
+        session catalog and skipped when absent."""
+        tables = []
+        for name, (path, df) in self.sources.items():
+            if df is None:
+                try:
+                    df = self.spark.table(name)
+                except AnalysisException:
+                    continue
+            tables.append((name, path, df.columns))
+        return source_catalog(tables)
 
     def query(self, prql: str) -> DataFrame:
-        if self.source_names:
-            prql = auto_from(prql, self.source_names[-1])
-        schemas, rows, nbytes = self.catalog()
-        sql = compile_prql(prql, dialect="spark", schemas=schemas or None,
-                           table_rows=rows, table_bytes=nbytes)
-        return self.spark.sql(sql)
+        if self.sources:
+            prql = auto_from(prql, list(self.sources)[-1])
+        return self.spark.sql(
+            compile_prql(prql, dialect="spark", **self.catalog()))
 
     def sql(self, sql: str) -> DataFrame:
         """Raw-SQL mode (`--sql`, reference main.rs:75-77)."""

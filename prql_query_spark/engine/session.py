@@ -25,9 +25,9 @@ def get_spark(app_name: str = "prql-query-spark",
     # parallelism — they only schedule empty tasks (interleaved A/B at
     # sf0.1: 8 MB splits measured ~5% slower than 128 MB across the
     # headline queries).  Operators that need CPU parallelism on small
-    # inputs get it from _spread()/repartition, not from splits.  The env
-    # knob remains for genuinely multi-row-group local files.
-    max_part = os.environ.get("PQ_MAX_PARTITION_BYTES")
+    # inputs get it from _spread()/repartition, not from splits.  Genuinely
+    # multi-row-group local files can pass
+    # extra_conf={"spark.sql.files.maxPartitionBytes": ...}.
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -50,8 +50,6 @@ def get_spark(app_name: str = "prql-query-spark",
         .config("spark.driver.memory", os.environ.get("PQ_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if max_part:
-        b = b.config("spark.sql.files.maxPartitionBytes", max_part)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -26,14 +26,6 @@ class SourceError(ValueError):
     pass
 
 
-def split_alias(source: str) -> tuple[str | None, str]:
-    """`alias=path` -> (alias, path); plain path -> (None, path)."""
-    if "=" in source:
-        alias, path = source.split("=", 1)
-        return alias, path
-    return None, source
-
-
 def infer_format(path: str) -> str | None:
     ext = os.path.splitext(path)[1].lstrip(".").lower()
     if ext == "ndjson":
@@ -53,6 +45,21 @@ def table_name_for(path: str, alias: str | None) -> str:
         return re.sub(r"\s+", "_", base)
     stem = os.path.splitext(base)[0]
     return re.sub(r"\s+", "_", stem)  # spaces -> _ (main.rs:310)
+
+
+def standardise_sources(sources: list[str]) -> list[tuple[str, str | None]]:
+    """`--from` entries -> (table name, path to read), the one naming rule
+    (reference `standardise_sources`, main.rs:287-323): the alias; else,
+    for an unknown extension, the entry itself as a passthrough table that
+    already exists (path None); else the file stem."""
+    out: list[tuple[str, str | None]] = []
+    for src in sources:
+        alias, path = src.split("=", 1) if "=" in src else (None, src)
+        if alias is None and infer_format(path) is None:
+            out.append((path, None))
+        else:
+            out.append((table_name_for(path, alias), path))
+    return out
 
 
 def read_source(spark: SparkSession, path: str, fmt: str | None = None,
@@ -134,7 +141,7 @@ def read_source(spark: SparkSession, path: str, fmt: str | None = None,
             return spark.read.schema(schema).json(path)
         return spark.read.json(path)  # NDJSON is Spark's default JSON framing
     if fmt == "parquet":
-        return spark.read.parquet(path)
+        return load_parquet(spark, path)
     if fmt == "avro":
         # the reference declares avro but panics unimplemented on use
         # (src/main.rs:25, datafusion.rs:47-49).  Here the scan is LIVE in
@@ -185,37 +192,70 @@ def read_source(spark: SparkSession, path: str, fmt: str | None = None,
 
 
 def register_sources(spark: SparkSession, sources: list[str],
-                     schema: str | None = None) -> list[str]:
+                     schema: str | None = None
+                     ) -> list[tuple[str, str | None, DataFrame | None]]:
     """Register each `alias=path` (or bare path) as a temp view.
 
-    Returns registered table names in order; the last one drives auto-`from`
-    insertion (reference main.rs:146-148 uses sources.last()).
+    Returns (table name, path, DataFrame) per entry in order, path and
+    DataFrame None for a passthrough table; the last name drives
+    auto-`from` insertion (reference main.rs:146-148 uses sources.last()).
     schema: optional DDL applied to every csv/ndjson source (--schema).
     Self-describing sources in the same list (parquet, avro, delta, ...)
     are unaffected — a csv joined against a parquet is the normal case —
     but if NO listed source can take the schema, fail loudly instead of
     silently ignoring the flag.
     """
-    names = []
+    out: list[tuple[str, str | None, DataFrame | None]] = []
     schema_used = False
-    for src in sources:
-        alias, path = split_alias(src)
-        fmt = infer_format(path)
-        if fmt is None and alias is None:
-            # schema-qualified passthrough: assume pre-registered table
-            names.append(path)
-            continue
-        src_schema = schema if fmt in ("csv", "json") else None
-        schema_used = schema_used or src_schema is not None
-        df = read_source(spark, path, fmt, schema=src_schema)
-        name = table_name_for(path, alias)
-        df.createOrReplaceTempView(name)
-        names.append(name)
+    for name, path in standardise_sources(sources):
+        df = None
+        if path is not None:
+            fmt = infer_format(path)
+            src_schema = schema if fmt in ("csv", "json") else None
+            schema_used = schema_used or src_schema is not None
+            df = read_source(spark, path, fmt, schema=src_schema)
+            df.createOrReplaceTempView(name)
+        out.append((name, path, df))
     if schema is not None and not schema_used:
         raise SourceError(
             "--schema supplied but no csv/ndjson source in the list "
             "(self-describing formats carry their own)")
-    return names
+    return out
+
+
+def source_catalog(
+    tables: list[tuple[str, str | None, list[str] | None]],
+) -> dict[str, dict]:
+    """`compile_prql` catalog keywords (schemas, table_rows, table_bytes)
+    for (table, path, columns) triples, feeding the compiler's
+    schema-dependent rewrites (eager aggregation and its reduction and
+    broadcast-regime cost gates).  Columns are taken as given, else from
+    the parquet footer; row counts and bytes come only from the footers
+    of a local `.parquet` file or directory of parquet part files.  A
+    table without cheap exact stats is simply absent, which makes the
+    cost gates hold the rewrite back (conservative by construction).
+    Reads footers only: no Spark."""
+    import pyarrow.parquet as papq
+
+    schemas: dict[str, list] = {}
+    rows: dict[str, int] = {}
+    nbytes: dict[str, int] = {}
+    for name, path, columns in tables:
+        parts: list[str] = []
+        if path and path.endswith(".parquet"):
+            if os.path.isfile(path):
+                parts = [path]
+            elif os.path.isdir(path):
+                parts = sorted(os.path.join(path, f) for f in os.listdir(path)
+                               if f.endswith(".parquet"))
+        if parts:
+            footers = [papq.ParquetFile(p) for p in parts]
+            columns = columns or footers[0].schema_arrow.names
+            rows[name] = sum(f.metadata.num_rows for f in footers)
+            nbytes[name] = sum(os.path.getsize(p) for p in parts)
+        if columns:
+            schemas[name] = list(columns)
+    return {"schemas": schemas, "table_rows": rows, "table_bytes": nbytes}
 
 
 def _arrow_list_field(arrow_schema, name: str):
@@ -350,6 +390,7 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     """
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     ns_cols: list[str] = []
     spark_schema = None
@@ -366,6 +407,8 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     else:
         dir_probe = False
     try:
+        if "://" in path:
+            raise OSError("remote footers are left to Spark")
         pf = pq.ParquetFile(probe)
         meta = pf.metadata.schema
         for i in range(len(meta)):
@@ -382,6 +425,14 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
             spark_schema = _spark_schema_from_footer(meta, pf.schema_arrow)
     except Exception:
         pass
+    if spark_schema is not None and any(
+            isinstance(f.dataType, T.TimestampNTZType) for f in spark_schema):
+        # isAdjustedToUTC=false timestamps infer as TIMESTAMP_NTZ only while
+        # spark.sql.parquet.inferTimestampNTZ.enabled holds (the default);
+        # with it off the JVM's inference decides
+        conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        if not conf.parquetInferTimestampNTZEnabled():
+            spark_schema = None
     if ns_cols:
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -394,21 +445,6 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-def register_dir(spark: SparkSession, sf_dir: str,
-                 tables: list[str] | None = None) -> list[str]:
-    """Register every parquet table in a testdata dir as a temp view."""
-    names = []
-    for fname in sorted(os.listdir(sf_dir)):
-        if not fname.endswith(".parquet"):
-            continue
-        name = fname[: -len(".parquet")]
-        if tables and name not in tables:
-            continue
-        load_parquet(spark, os.path.join(sf_dir, fname)).createOrReplaceTempView(name)
-        names.append(name)
-    return names
 
 
 def needs_auto_from(query: str) -> bool:

@@ -44,11 +44,10 @@ def _fmt(v) -> str:
 
 def write_single_file(df: DataFrame, path: str, fmt: str) -> None:
     """Arrow-writer parity: one output file via driver collect (CLI mode)."""
-    import pyarrow as pa
     import pyarrow.csv as pacsv
     import pyarrow.parquet as papq
 
-    tbl = df.toArrow() if hasattr(df, "toArrow") else pa.Table.from_pandas(df.toPandas())
+    tbl = df.toArrow()
     if fmt == "parquet":
         papq.write_table(tbl, path)
     elif fmt == "csv":

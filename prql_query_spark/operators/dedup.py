@@ -7,10 +7,10 @@ All operators are DataFrame-native and shuffle-aware:
   pipeline.  The only shuffle is on (band, bucket-hash); candidate
   verification joins happen *within* buckets, so cost scales with bucket
   sizes, not |corpus|^2.  Shingle/signature hashing runs in a vectorized
-  Arrow/numpy kernel by default (round 3 — 5-10x the interpreted-HOF JVM
-  path; `impl="jvm"` keeps the pure-JVM xxhash64 variant); candidate
-  pairs pass a signature-estimate gate before exact verification, so the
-  expensive shingle-set join only sees near-threshold pairs.  No
+  Arrow/numpy kernel (round 3 — 5-10x the interpreted-HOF JVM path);
+  candidate pairs pass a signature-estimate gate before exact
+  verification, so the expensive shingle-set join only sees
+  near-threshold pairs.  No
   row-at-a-time Python anywhere.
 * SimHash — 64-bit sign-aggregated token hashes, computed with
   higher-order SQL functions (transform/aggregate), also fully JVM-side.
@@ -34,23 +34,6 @@ from pyspark.sql import functions as F
 from prql_query_spark.engine.session import barrier
 
 from prql_query_spark.operators.text import ASCII_WS_SPARKSQL
-
-
-def shingles(text_col: Column, k: int = 5, pre_lowered: bool = False) -> Column:
-    """Distinct character k-shingles of a string, JVM-side.
-
-    PERF: the lambda body is evaluated per element, so callers on a hot path
-    should materialize ``lower(text)`` as its own projected column first and
-    pass ``pre_lowered=True`` — otherwise each substr re-lowers the whole
-    string (O(len^2) per document).
-    """
-    t = text_col if pre_lowered else F.lower(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -148,42 +131,26 @@ def minhash_signatures(
     text_col: str = "text",
     num_perm: int = 64,
     k: int = 5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(_id, _sig) with a num_perm-wide MinHash signature per document.
 
-    ``impl="arrow"`` (default) computes signatures in a vectorized
-    Arrow/numpy kernel (`mapInPandas`): one rolling polynomial hash pass
-    over the batch's concatenated bytes, then per-permutation affine
-    scrambles (odd multiplier + offset, mod 2^64) reduced with
-    ``np.minimum.reduceat`` over document segments.  Measured 10x the
-    JVM path on the sf0.1 documents table (~0.8 s-core vs ~8 s-core for
-    5,000 docs x 64 perms): Spark's higher-order functions are
-    interpreted per element, so 64 `aggregate()` lambdas over ~300-item
-    shingle arrays pay ~interpretive overhead the numpy kernel doesn't.
+    Signatures come from a vectorized Arrow/numpy kernel (`mapInPandas`):
+    one rolling polynomial hash pass over the batch's concatenated bytes,
+    then per-permutation affine scrambles (odd multiplier + offset, mod
+    2^64) reduced with ``np.minimum.reduceat`` over document segments.
+    Measured 10x a pure-JVM xxhash64 path on the sf0.1 documents table
+    (~0.8 s-core vs ~8 s-core for 5,000 docs x 64 perms): Spark's
+    higher-order functions are interpreted per element, so 64
+    `aggregate()` lambdas over ~300-item shingle arrays pay
+    ~interpretive overhead the numpy kernel doesn't.
     ANSI mode rules out the same affine trick JVM-side (long overflow
     throws; numpy uint64 wraps).
 
-    ``impl="jvm"`` keeps the pure-JVM path (seeded xxhash64 via
-    aggregate+least, no Python workers) — the right choice when Python
-    worker startup dominates (tiny ad-hoc queries) or Arrow is disabled.
-
-    The two impls are DIFFERENT uniform hash families: signatures are not
-    bit-comparable across impls, so a persisted corpus index
-    (build_minhash_index) must be probed with the impl it was built with.
     Everything downstream (banding, bucketing, candidate verification)
     only needs per-(doc,perm) uniform mins, and every caller verifies
-    candidates with exact Jaccard, so pair OUTPUT is impl-stable for any
-    corpus whose near-dups sit above the band-recall knee (see
-    x_minhash_pairs' oracle note).
-
-    Note: duplicate shingles never change a min, so the kernel skips the
-    distinct step the JVM path's shingles() performs — same signatures,
-    one less pass.
+    candidates with exact Jaccard.  Duplicate shingles never change a
+    min, so the kernel skips the distinct step.
     """
-    if impl == "jvm":
-        return _minhash_signatures_jvm(df, id_col, text_col, num_perm, k)
-
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -287,10 +254,10 @@ def _shingle_hash_flat(texts, k: int):
 def _shingle_hash_arrays(df: DataFrame, id_col: str, text_col: str,
                          k: int) -> DataFrame:
     """(_jid, _sh array<long>): per-document DISTINCT hashed shingle sets
-    via the vectorized batch kernel — the Arrow twin of
-    ``array_distinct(transform(shingles(text), s -> xxhash64(s)))``, ~5x
-    cheaper on the documents table (same rolling-hash pass as
-    minhash_signatures; only the hash family differs, which set
+    via the vectorized batch kernel — the distinct xxhash64 set of the
+    lowered text's k-substrings, computed ~5x cheaper than JVM
+    higher-order functions on the documents table (same rolling-hash
+    pass as minhash_signatures; only the hash family differs, which set
     cardinalities cannot observe)."""
     import pandas as pd
     from pyspark.sql import types as T
@@ -313,40 +280,6 @@ def _shingle_hash_arrays(df: DataFrame, id_col: str, text_col: str,
             yield pd.DataFrame({"_jid": pdf[id_col], "_sh": arrays})
 
     return _spread(df.select(id_col, text_col)).mapInPandas(gen, out_schema)
-
-
-def _minhash_signatures_jvm(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    k: int = 5,
-) -> DataFrame:
-    """Pure-JVM signature path (seeded xxhash64, no Python workers).
-
-    Staged projections so each expensive step is evaluated exactly ONCE per
-    row (Catalyst's CollapseProject keeps multiply-referenced non-cheap
-    expressions in their own project): lower the text, build the shingle
-    array, hash each shingle to a long, then derive each permutation's min
-    with aggregate()+least over seeded xxhash64 on 8-byte inputs — the
-    string is hashed once, not num_perm times, and no intermediate
-    per-permutation array is ever allocated (higher-order functions are
-    interpreted, so allocation pressure dominates otherwise).  All JVM-side.
-    """
-    LONG_MAX = (1 << 63) - 1
-    # one SQL string, not num_perm Column objects: building hundreds of
-    # lambda Columns costs ~0.8s of py4j round-trips per call
-    aggs = ", ".join(
-        f"aggregate(`_h`, {LONG_MAX}L, (acc, h) -> least(acc, xxhash64(h, {p})))"
-        for p in range(num_perm)
-    )
-    return (
-        df.select(F.col(id_col).alias("_id"), F.lower(F.col(text_col)).alias("_lt"))
-        .withColumn("_sh", shingles(F.col("_lt"), k, pre_lowered=True))
-        .withColumn("_h", F.expr("transform(`_sh`, s -> xxhash64(s))"))
-        .withColumn("_sig", F.expr(f"array({aggs})"))
-        .select("_id", "_sig")
-    )
 
 
 def _banded_buckets(
@@ -574,7 +507,6 @@ def minhash_verified_pairs(
 def ngram_jaccard(
     df_pairs: DataFrame, docs: DataFrame,
     id_col: str = "doc_id", text_col: str = "text", k: int = 5,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Exact Jaccard similarity over k-shingle sets for candidate pairs.
 
@@ -583,7 +515,7 @@ def ngram_jaccard(
     (once per side) would compute every document's shingle array twice,
     which is the expensive branch of this operator.
 
-    `hash_shingles` maps each shingle to a 64-bit hash before the
+    Each shingle is mapped to a 64-bit hash before the
     intersect/union (same set cardinalities modulo 64-bit collisions,
     ~1e-8 at 1M distinct shingles): long-array set ops are ~7x cheaper
     than string-array ones and the per-pair arrays shrink 5x in memory —
@@ -591,19 +523,9 @@ def ngram_jaccard(
     not.  The hashed shingle table is built by the vectorized Arrow
     kernel (_shingle_hash_arrays — shared with minhash_signatures, ~5x
     the JVM HOF path); Jaccard VALUES are hash-family-independent since
-    only cardinalities survive.  Pass False to compare raw strings
-    JVM-side.
+    only cardinalities survive.
     """
-    if hash_shingles:
-        sh = _shingle_hash_arrays(docs, id_col, text_col, k)
-    else:
-        sh = (
-            _spread(docs)
-            .select(F.col(id_col).alias("_jid"),
-                    F.lower(F.col(text_col)).alias("_lt"))
-            .withColumn("_sh", shingles(F.col("_lt"), k, pre_lowered=True))
-            .select("_jid", "_sh")
-        )
+    sh = _shingle_hash_arrays(docs, id_col, text_col, k)
     melted = df_pairs.select(
         "*",
         F.explode(
@@ -826,12 +748,15 @@ def minhash_dedup(
     return df.join(losers, on=id_col, how="left_anti")
 
 
+# connected_components: round cap, and the first round that pointer-jumps
+_CC_MAX_ITER = 50
+_CC_PTR_JUMP_AFTER = 2
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_iter: int = 50,
-    ptr_jump_after: int = 2,
 ) -> DataFrame:
     """(node, component) labeling of the undirected graph given as edge pairs.
 
@@ -879,11 +804,11 @@ def connected_components(
     # O(log diameter) on chains — but costs an extra self-join every
     # round.  Near-dup graphs converge in ~2 rounds with or without it
     # (interleaved at sf0.1: 2 rounds both ways, 0.87 s vs 1.30 s), so the
-    # jump join only switches on from round `ptr_jump_after`: shallow
+    # jump join only switches on from round _CC_PTR_JUMP_AFTER: shallow
     # graphs (the common case) never pay it, pathological chains still get
     # the logarithmic asymptotics after the grace rounds.
     comp_type = labels.schema["comp"].dataType
-    for it in range(1, max_iter):
+    for it in range(1, _CC_MAX_ITER):
         if n_changed == 0:
             break
         # min label over {self} ∪ neighbors, one shuffle.  The self rows
@@ -900,7 +825,7 @@ def connected_components(
             .agg(F.min("comp").alias("comp"),
                  F.max("_old").alias("_old"))
         )
-        if it >= ptr_jump_after:
+        if it >= _CC_PTR_JUMP_AFTER:
             mapping = new_labels.select(
                 F.col("node").alias("m_node"), F.col("comp").alias("m_comp")
             )

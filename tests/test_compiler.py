@@ -276,6 +276,102 @@ def test_cli_no_exec_prints_sql(capsys):
     assert rc == 0 and "SELECT" in out and "LIMIT 3" in out
 
 
+def test_cli_no_exec_passthrough_keeps_full_name(capsys):
+    """A --from entry with an unknown extension is a passthrough table:
+    auto-from names it in full, as registration does, not by its stem."""
+    import pq
+
+    rc = pq.main(["--no-exec", "-f", "main.orders", "select [a]"])
+    out = capsys.readouterr().out
+    assert rc == 0 and "FROM `main`.`orders`" in out
+
+
+def test_cli_parquet_source_with_ns_timestamps(spark, tmp_path, capsys):
+    """CLI parquet sources load through load_parquet: INT64
+    TIMESTAMP(NANOS) columns read, truncated to microseconds."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    import pq
+
+    p = tmp_path / "ns.parquet"
+    ts = pa.array([1_700_000_000_123_456_789], type=pa.int64()).cast(
+        pa.timestamp("ns"))
+    papq.write_table(pa.table({"id": [1], "ts": ts}), str(p))
+    rc = pq.main(["-f", f"n={p}", "from n | select [ts]"])
+    out = capsys.readouterr().out
+    want = datetime.datetime(2023, 11, 14, 22, 13, 20, 123456)
+    assert rc == 0 and f"| {want} |" in out
+
+
+def test_cli_exec_compiles_once(spark, tmp_path, capsys, monkeypatch):
+    """The exec path compiles once, after registration, with the catalog."""
+    import prql_query_spark
+    import pq
+
+    calls = []
+    real = prql_query_spark.compile_prql
+
+    def counting(*a, **kw):
+        calls.append(kw)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(prql_query_spark, "compile_prql", counting)
+    csv = tmp_path / "d.csv"
+    csv.write_text("a,b\n1,x\n2,y\n")
+    rc = pq.main(["-f", f"d={csv}", "aggregate [n = count]"])
+    assert rc == 0 and "| 2 " in capsys.readouterr().out
+    assert len(calls) == 1 and calls[0]["schemas"] == {"d": ["a", "b"]}
+
+
+def test_engine_catalog_matches_entry_catalog(spark):
+    """PrqlEngine and __spark_entry__ build the compiler catalog through
+    the same helper: columns from the registered frames equal the
+    footer columns, and parquet row counts and bytes agree."""
+    import __spark_entry__ as entry
+    from prql_query_spark.engine import PrqlEngine
+
+    eng = PrqlEngine(spark)
+    eng.add_sources([f"{t}={SF}/{t}.parquet" for t in TABLES])
+    # the views now hold sf0.001: make __spark_entry__._reg re-register
+    entry._REG_CURRENT.pop(spark.sparkContext.applicationId, None)
+    assert eng.catalog() == entry._compile_kwargs(SF)
+
+    # passthrough tables: columns from the session catalog, absent if unknown
+    spark.range(1).createOrReplaceTempView("pt_view")
+    eng = PrqlEngine(spark)
+    eng.add_sources(["pt_view", "main.absent"])
+    assert eng.catalog()["schemas"] == {"pt_view": ["id"]}
+
+
+# sha256[:16] of the Spark SQL the benchmark's olap_read queries compile to
+# against the sf0.01 catalog; a change here changes what the benchmark runs
+OLAP_SQL_SHA = {
+    "q_agg_q1": "f2d3ad84e59e791e",
+    "q_join_agg_q5": "6a7bc0ac676ea6d8",
+    "q_topk_customers": "d94b87ec365fb0bc",
+    "q_window_running": "b464c1cd350650c7",
+    "q_flagship_monthly": "4693bb9c6a9884b2",
+    "q_shipping_priority_q3": "26e0d3ed14d01968",
+    "q_let_cte": "42115c36b20a645b",
+    "q_set_intersect": "553bb6b158b3d2ed",
+}
+
+
+def test_olap_queries_compile_unchanged():
+    import hashlib
+
+    import __spark_entry__ as entry
+
+    kw = entry._compile_kwargs(SF.replace("sf0.001", "sf0.01"))
+    got = {q: hashlib.sha256(compile_prql(
+        entry.PRQL_QUERIES[q], "spark", **kw).encode()).hexdigest()[:16]
+        for q in OLAP_SQL_SHA}
+    assert got == OLAP_SQL_SHA
+
+
 def test_cli_explain_shows_pushdown(spark, capsys, sf_dir):
     """--explain surfaces the Catalyst plan; the filter must reach the
     parquet scan as a pushed filter."""

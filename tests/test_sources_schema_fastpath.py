@@ -65,3 +65,18 @@ def test_fastpath_ns_timestamps_keep_legacy_path(tmp_path, spark):
     pq.write_table(t, p)
     df = S.load_parquet(spark, p)
     assert [str(r.ts) for r in df.collect()] == ["2030-01-02 03:04:05"]
+
+
+@pytest.mark.parametrize("ntz", ["false", "true"])
+def test_fastpath_honours_infer_timestamp_ntz(spark, ntz):
+    """isAdjustedToUTC=false timestamps (events.ts) type as TIMESTAMP_NTZ
+    only while spark.sql.parquet.inferTimestampNTZ.enabled holds; with it
+    off the footer path must agree with JVM inference (TimestampType)."""
+    path = os.path.join(SF_DIRS[0], "events.parquet")
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(key, ntz)
+    try:
+        assert S.load_parquet(spark, path).schema == \
+            spark.read.parquet(path).schema
+    finally:
+        spark.conf.unset(key)

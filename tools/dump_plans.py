@@ -35,7 +35,7 @@ QUERIES = [
      "reach both scans. This is the plan that survives a 1000-executor "
      "100 TB run: broadcasts are size-bound, the single exchange is the "
      "final group-by.\n\nRound-8 sf1 verification "
-     "(`tools/probe_joinagg_sf1.py`, 6M-row lineitem, 10× orders/"
+     "(interleaved sf1 probe, since retired; 6M-row lineitem, 10× orders/"
      "customer): the plan is UNCHANGED at sf1 — all three dimension "
      "joins still BroadcastHashJoin BuildRight (the compiler's "
      "size-gated broadcast hints, not the 10 MB session threshold, "
