@@ -7,6 +7,8 @@ tests of its own; we use DuckDB as the executable oracle for compiled SQL.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -228,14 +230,49 @@ def test_spark_dialect_strftime_shim():
     assert "date_format" in sql and "STRFTIME" not in sql
 
 
+# Lines as SURVEY.md §2 cites them: join :2, derive :3-6, s-strings :4-5 and
+# :9, sums :10-11, group/sort/window :14-19, sort :20, lag :21.
+INVOICE_TOTALS_PRQL = """\
+from i=invoices
+join ii=invoice_items [==invoice_id]
+derive [
+    month = s"STRFTIME('%Y-%m', {i.invoice_date})",
+    day = s"STRFTIME('%Y-%m-%d', {i.invoice_date})",
+]
+group [month, day] (
+    aggregate [
+        num_orders = s"COUNT(DISTINCT {i.invoice_id})",
+        num_tracks = sum ii.quantity,
+        total_price = sum (ii.unit_price * ii.quantity),
+    ]
+)
+group [month] (
+    sort day
+    window expanding:true (
+        derive [running_total_num_tracks = sum num_tracks]
+    )
+)
+sort day
+derive [num_tracks_last_week = lag 7 num_tracks]
+"""
+INVOICE_TOTALS_REF = "/root/reference/examples/queries/invoice_totals.prql"
+
+
 def test_two_level_window_flagship():
     """invoice_totals shape: aggregate then window-over-aggregate
-    (reference README.md:105-129)."""
-    prql = open("/root/reference/examples/queries/invoice_totals.prql").read()
-    sql = compile_prql(prql, "spark")
-    assert "SUM(`num_tracks`) OVER (PARTITION BY `month`" in sql
-    assert "LAG(`num_tracks`, 7) OVER" in sql
-    assert "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW" in sql
+    (reference README.md:105-129).  Compiles INVOICE_TOTALS_PRQL, a copy of
+    the reference's examples/queries/invoice_totals.prql:1-21 laid out line
+    for line as SURVEY.md cites it; wherever the reference checkout is
+    present, its own file is compiled and checked the same way too."""
+    prqls = [INVOICE_TOTALS_PRQL]
+    if os.path.exists(INVOICE_TOTALS_REF):
+        with open(INVOICE_TOTALS_REF) as f:
+            prqls.append(f.read())
+    for prql in prqls:
+        sql = compile_prql(prql, "spark")
+        assert "SUM(`num_tracks`) OVER (PARTITION BY `month`" in sql
+        assert "LAG(`num_tracks`, 7) OVER" in sql
+        assert "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW" in sql
 
 
 # ------------------------------------------------------------------- loop
