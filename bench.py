@@ -42,9 +42,6 @@ def main() -> None:
     from prql_query_spark.engine.session import sources_bytes, tune_session_for
 
     tune_session_for(spark, sources_bytes([sf_dir]))
-    # catalog schemas enable the compiler's eager-aggregation rewrite —
-    # the same schema-aware path _prql_runner (the driver gate) compiles
-    compile_kwargs = entrymod._compile_kwargs(sf_dir)
     startup = time.time() - t0
 
     # BASELINE.md §2 shapes, verbatim semantics (q_take is the pure
@@ -169,11 +166,11 @@ take 10
     t_w = time.time()
     for _ in range(2):
         for name, prql in bench_prql.items():
-            execute(spark.sql(compile_prql(prql, "spark", **compile_kwargs)))
+            execute(spark.sql(compile_prql(prql, "spark")))
     warmup = time.time() - t_w
 
     for name, prql in bench_prql.items():
-        sql = compile_prql(prql, "spark", **compile_kwargs)
+        sql = compile_prql(prql, "spark")
         results[name] = time_df(lambda s=sql: spark.sql(s))
         note(f"bench {name}: {results[name]}s")
 
@@ -308,9 +305,9 @@ take 10
         tune_splits_for_layout(
             spark, [os.path.join(cdir, f"{t}.parquet") for t in big])
         for name, prql in bench_prql.items():
-            execute(spark.sql(compile_prql(prql, "spark", **compile_kwargs)))  # re-warm plans
+            execute(spark.sql(compile_prql(prql, "spark")))  # re-warm plans
         for name, prql in bench_prql.items():
-            sql = compile_prql(prql, "spark", **compile_kwargs)
+            sql = compile_prql(prql, "spark")
             compacted[name] = time_df(lambda s=sql: spark.sql(s))
             note(f"bench {name} [compacted]: {compacted[name]}s")
         shutil.rmtree(cdir, ignore_errors=True)
@@ -447,10 +444,10 @@ take 10
             scal_prql = {k: bench_prql[k]
                          for k in ("q_agg", "q_join_agg", "q_window")}
             for name, prql in scal_prql.items():
-                sql = compile_prql(prql, "spark", **compile_kwargs)
+                sql = compile_prql(prql, "spark")
                 execute(spark.sql(sql))  # warm the 10x plans
             for name, prql in scal_prql.items():
-                sql = compile_prql(prql, "spark", **compile_kwargs)
+                sql = compile_prql(prql, "spark")
                 scaling10x[name] = time_df(lambda s=sql: spark.sql(s), runs=3)
                 note(f"bench {name} [scaling10x]: {scaling10x[name]}s")
             scal_ext = {

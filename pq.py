@@ -143,13 +143,16 @@ def main(argv: list[str] | None = None) -> int:
     from prql_query_spark import compile_prql
     from prql_query_spark.engine.sources import auto_from, standardise_sources
 
-    # ---- auto-from + transpile-only path (main.rs:144-150, 229-231)
+    # ---- auto-from + compile (main.rs:144-150, 280): once, before any
+    # Spark session starts, so a PRQL error is reported at no session cost
     sources = standardise_sources(frm)
     if not use_sql and sources:
         query = auto_from(query, sources[-1][0])
+    sql = query if use_sql else compile_prql(query, "spark")
 
+    # ---- transpile-only path (main.rs:229-231)
     if args.no_exec or (not database and not frm and not use_sql):
-        print(query if use_sql else compile_prql(query, dialect="spark"))
+        print(sql)
         return 0
 
     # ---- execution
@@ -170,11 +173,6 @@ def main(argv: list[str] | None = None) -> int:
         attach_database(spark, database)
     eng.add_sources(frm, schema=args.schema)
     tune_session_for(spark, sources_bytes([p for _, p in sources if p]))
-    # compiled once, against the registered sources: the catalog (columns
-    # + parquet stats) enables schema-dependent rewrites (eager
-    # aggregation); the transpile-only path above stays plain
-    sql = query if use_sql else compile_prql(
-        query, dialect="spark", **eng.catalog())
     df = eng.sql(sql)
 
     if args.explain:

@@ -11,64 +11,36 @@ reference's DuckDB backend injects file sources at the PL level
 
 from __future__ import annotations
 
-from prql_query_spark.compiler import ast_nodes as A
 from prql_query_spark.compiler.dialect import DIALECTS, get_dialect
 from prql_query_spark.compiler.parser import ParseError, parse
-from prql_query_spark.compiler.sqlgen import CompileError, ExprCtx, SqlGen
+from prql_query_spark.compiler.sqlgen import CompileError, Emitter, ExprCtx, SqlGen
 
 __all__ = ["compile_prql", "parse", "ParseError", "CompileError", "DIALECTS"]
 
 
-def compile_prql(src: str, dialect: str = "spark",
-                 extra_ctes: dict[str, str] | None = None,
-                 schemas: dict[str, list[str]] | None = None,
-                 table_rows: dict[str, int] | None = None,
-                 table_bytes: dict[str, int] | None = None) -> str:
+def compile_prql(src: str, dialect: str = "spark") -> str:
     """Compile PRQL text to a single SQL statement in the given dialect.
 
-    extra_ctes: name -> raw SQL body, prepended as CTEs (used by the engine
-    to inject file sources as named relations, reference duckdb.rs:32-60).
-
-    schemas: table -> column names for the tables the query may reference.
-    Optional; when provided (engine callers know their catalog) it enables
-    schema-dependent plan rewrites — currently eager aggregation (group-by
-    pushdown below fact-dim joins, sqlgen._try_eager_agg).  Compiling
-    without schemas always yields the plain form, which is what the DuckDB
-    oracle runs, so every rewrite is value-checked against its un-rewritten
-    twin by the parity gates.
-
-    table_rows: table -> row count (parquet footer metadata).  Cost gate
-    for eager aggregation: the rewrite only fires when |fact| is at least
-    SqlGen.EAGER_MIN_REDUCTION times |dim1| — below that the pre-aggregate
-    exchange costs more than the probe/agg rows it saves.
-
-    table_bytes: table -> on-disk bytes.  Second cost gate: the rewrite
-    only fires when dim1 is past SqlGen.EAGER_MIN_DIM_BYTES (Spark's
-    broadcast threshold) — against a broadcast dim the plain plan never
-    shuffles the fact and measured FASTER at every reduction tried.
+    A pure text-to-text function, as in the reference (prql-compiler,
+    main.rs:280): it knows nothing of the tables the query reads, and
+    leaves planning (join order, aggregation placement, broadcast) to the
+    engine that runs the SQL — Catalyst here, DuckDB for the oracle.
     """
     q = parse(src)
-    ctes: list[tuple[str, str]] = list((extra_ctes or {}).items())
+    ctes: list[tuple[str, str]] = []
     d = get_dialect(dialect)
-    cte_names = {n for n, _ in ctes}
 
     for let in q.lets:
-        cte_names.add(let.name)
         if let.sql is not None:
-            em_gen = SqlGen(d, q.funcs, cte_names)
-            em_gen.layer = None
-            from prql_query_spark.compiler.sqlgen import Emitter
             raw = Emitter(d, q.funcs, set()).emit(let.sql, ExprCtx())
             ctes.append((let.name, raw))
         else:
-            sub = SqlGen(d, q.funcs, cte_names, schemas=schemas,
-                         table_rows=table_rows, table_bytes=table_bytes)
+            sub = SqlGen(d, q.funcs)
             for t in let.pipeline:
                 sub.apply(t)
             ctes.append((let.name, sub.finish()))
 
-    gen = SqlGen(d, q.funcs, cte_names, schemas=schemas,
-                 table_rows=table_rows, table_bytes=table_bytes)
+    gen = SqlGen(d, q.funcs)
     if not q.pipeline:
         raise CompileError("query has no main pipeline")
     for t in q.pipeline:

@@ -322,13 +322,6 @@ class Layer:
     aliases: set = field(default_factory=set)
     joins: list = field(default_factory=list)
     wheres: list = field(default_factory=list)
-    # structured provenance kept alongside the SQL strings so the eager-
-    # aggregation rewrite can reason about sides; None/empty when the layer
-    # is a wrapped subquery (which disables the rewrite)
-    from_table: str | None = None
-    from_alias: str | None = None
-    join_meta: list = field(default_factory=list)   # dicts, see _join
-    where_asts: list = field(default_factory=list)  # AST twin of wheres
     group_keys: list = field(default_factory=list)   # (out_name, sql)
     aggs: list = field(default_factory=list)         # (out_name, sql)
     derives: list = field(default_factory=list)      # (out_name, sql)
@@ -350,41 +343,9 @@ class Layer:
 
 
 class SqlGen:
-    # eager aggregation must buy at least this row-count reduction
-    # (|fact| / |dim1| as the ndv(fk) proxy) before it trades the plain
-    # plan's zero fact shuffles for a pre-aggregate exchange
-    EAGER_MIN_REDUCTION = 8
-    # ...and the dimension must be too big to broadcast (Spark's default
-    # autoBroadcastJoinThreshold).  Measured at sf1 (SCALING.md): against
-    # a broadcast dim the plain plan's map-side partial aggregate already
-    # reduces each task's output before its one exchange, and eager
-    # aggregation LOSES 4-21%; against a shuffle join it wins 19% on a
-    # single node — and at cluster scale that is the difference between
-    # shuffling the fact table and shuffling ndv(fk) partial rows.
-    EAGER_MIN_DIM_BYTES = 10 * 1024 * 1024
-
-    def __init__(self, dialect, funcs: dict, cte_names: set[str] | None = None,
-                 schemas: dict[str, list[str]] | None = None,
-                 table_rows: dict[str, int] | None = None,
-                 table_bytes: dict[str, int] | None = None):
+    def __init__(self, dialect, funcs: dict):
         self.d = get_dialect(dialect)
         self.funcs = funcs
-        self.cte_names = cte_names or set()
-        # table -> column names, supplied by engine callers that know the
-        # catalog (pq/bench/__spark_entry__).  Enables the eager-aggregation
-        # rewrite; compiling without schemas (the DuckDB oracle path) always
-        # yields the plain join-then-aggregate form.
-        self.schemas = schemas
-        # table -> row count (parquet footer metadata; cheap).  Cost gate
-        # for eager aggregation: the pre-aggregate's output is at most
-        # |dim1| rows after the inner join, so |fact|/|dim1| bounds the
-        # reduction the extra exchange buys.  When absent, the rewrite
-        # fires on shape alone (explicit schemas= is already an opt-in).
-        self.table_rows = table_rows
-        # table -> on-disk bytes: proxy for "will Spark broadcast this
-        # dim?" — eager aggregation only pays in the shuffle-join regime
-        # (see EAGER_MIN_DIM_BYTES).
-        self.table_bytes = table_bytes
         self.counter = 0
         self.layer: Layer | None = None
 
@@ -416,16 +377,13 @@ class SqlGen:
     def apply(self, t) -> None:
         if isinstance(t, A.From):
             name = t.table
-            tbl = name if name in self.cte_names else name
             alias = t.alias
-            from_sql = self.d.qualified(tbl)
+            from_sql = self.d.qualified(name)
             aliases = {name.split(".")[-1]}
             if alias:
                 from_sql += f" AS {self.d.quote(alias)}"
                 aliases = {alias}
-            self.layer = Layer(from_sql=from_sql, aliases=aliases,
-                               from_table=name,
-                               from_alias=alias or name.split(".")[-1])
+            self.layer = Layer(from_sql=from_sql, aliases=aliases)
             return
         if self.layer is None:
             raise CompileError("pipeline must start with `from`")
@@ -482,21 +440,12 @@ class SqlGen:
         else:
             clause = f"CROSS JOIN {tbl_sql}"
         self.layer.joins.append(clause)
-        self.layer.join_meta.append({
-            "table": t.table,
-            "alias": alias or t.table.split(".")[-1],
-            "alias_explicit": alias is not None,
-            "side": t.side,
-            "conds": t.conds,
-        })
-
     def _filter(self, t: A.Filter) -> None:
         if (self.layer.limit is not None or self.layer.group_keys or self.layer.aggs
                 or self.layer.derives or self.layer.projection or self.layer.distinct
                 or self.layer.exclude):
             self._wrap()
         self.layer.wheres.append(self.emitter().emit(t.expr, ExprCtx()))
-        self.layer.where_asts.append(t.expr)
 
     def _derive(self, assigns, window: WindowSpec | None = None) -> None:
         if self.layer.limit is not None or self.layer.distinct:
@@ -556,8 +505,6 @@ class SqlGen:
     def _group(self, t: A.Group) -> None:
         if self._try_distinct_idiom(t):
             return
-        if self._try_eager_agg(t):
-            return
         if not self.layer.is_bare():
             self._wrap()
         em = self.emitter()
@@ -605,265 +552,6 @@ class SqlGen:
                 raise CompileError(
                     f"unsupported transform in group: {type(st).__name__}")
             i += 1
-
-    def _try_eager_agg(self, t: A.Group) -> bool:
-        """Group-by pushdown below a fact-dim join (eager aggregation,
-        Yan & Larson, VLDB'95 "Eager Aggregation and Lazy Aggregation").
-
-        `from fact | join dim [fk == pk] | group [dim cols] (aggregate …)`
-        normally joins the full fact table against the dimension and then
-        hash-aggregates fact-cardinality rows by the (often string-typed)
-        dim attributes.  When every aggregate decomposes (sum/count/min/
-        max/average) and references only fact columns, the identical result
-        is obtained by pre-aggregating the fact table by its OWN join key
-        first, joining the per-key partials against the dimension, and
-        finishing the aggregate over the dim attributes.  Valid for inner
-        equi-joins regardless of key duplication: each partial row joins
-        against the same dim rows its base rows would have, so every
-        contribution lands in the same group with the same multiplicity.
-
-        At 100 TB this is the difference between shuffling/joining the
-        fact table and joining one row per join key: the join probe input
-        shrinks from |fact| to ndv(fk), and the final aggregate runs over
-        ndv(fk) rows instead of |fact| (the string-key hash-agg term
-        SCALING.md measured at ~210 ms on q5's silhouette).  Measured on
-        q_topk_customers at sf0.1 it replaces a 150k-row string hash-agg
-        with an int hash-agg plus a 15k-row string hash-agg.
-
-        Fires only when the caller supplied table schemas
-        (compile_prql(schemas=...)) — the DuckDB oracle compiles WITHOUT
-        schemas and keeps the plain join-then-aggregate form, so the
-        per-round driver gate value-checks this rewrite against an
-        un-rewritten twin.  Bails (returns False, plain path applies) on:
-        outer joins, multi-join layers, non-equi or multi-column join
-        conditions, group keys not provably dim-side, aggregates that
-        don't decompose (stddev, count_distinct, percentile), aggregate
-        args not provably fact-side, mixed-side WHERE predicates, user
-        funcs / s-strings anywhere in scope, and name collisions between
-        the join key and group keys.
-
-        FP note: decomposing a double SUM changes the summation tree
-        (per-key partials first), which can drift the result by an ulp —
-        the same non-associativity class as Spark's own partition-order
-        nondeterminism, and why the repo rounds every money aggregate in
-        DECIMAL (FIXTURES.md).  Integer sums, counts, min and max are
-        exact; the randomized differential test pins all of this.
-        """
-        if self.schemas is None or self.d.name != "spark":
-            return False
-        L = self.layer
-        if (L.from_table is None or not L.join_meta
-                or len(L.join_meta) != len(L.joins)
-                or L.group_keys or L.aggs or L.derives or L.projection
-                or L.exclude or L.distinct or L.sorts
-                or L.limit is not None or L.offset):
-            return False
-        if len(L.wheres) != len(L.where_asts):
-            return False
-        if any(jm["side"] != "inner" for jm in L.join_meta):
-            return False
-        fact_t, fact_a = L.from_table, L.from_alias
-        tables = [(fact_t, fact_a)] + [
-            (jm["table"], jm["alias"]) for jm in L.join_meta]
-        aliases = [a for _, a in tables]
-        if len({t for t, _ in tables}) != len(tables) \
-                or len(set(aliases)) != len(aliases):
-            return False  # self-join somewhere: sides are ambiguous
-        colsets = []
-        for tbl_name, _ in tables:
-            cols = set(self.schemas.get(tbl_name) or [])
-            if not cols:
-                return False
-            colsets.append(cols)
-        fact_cols = colsets[0]
-
-        # --- cost gates.  (1) reduction: the pre-aggregate joins inner
-        # against dim 1, so its surviving output is at most |dim1| rows;
-        # require the implied |fact|/|dim1| reduction.  (2) join regime:
-        # a broadcastable dim means the plain plan never shuffles the fact
-        # at all and its map-side partial aggregate already reduces before
-        # the single exchange — measured at sf1 eager LOSES there even at
-        # 100x reduction, and WINS 19% once the join must shuffle.  Fire
-        # only when the dim is past the broadcast threshold.
-        if self.table_rows is not None:
-            fact_rows = self.table_rows.get(fact_t)
-            dim_rows = self.table_rows.get(tables[1][0])
-            if not fact_rows or not dim_rows:
-                return False
-            if fact_rows < self.EAGER_MIN_REDUCTION * dim_rows:
-                return False
-        if self.table_bytes is not None:
-            dim_bytes = self.table_bytes.get(tables[1][0])
-            if not dim_bytes or dim_bytes < self.EAGER_MIN_DIM_BYTES:
-                return False
-
-        def side_of(ident: A.Ident) -> str | None:
-            """'fact', 'dim', or None (unknown/ambiguous)."""
-            if len(ident.parts) == 2:
-                for i, a in enumerate(aliases):
-                    if ident.parts[0] == a:
-                        if ident.parts[1] not in colsets[i]:
-                            return None
-                        return "fact" if i == 0 else "dim"
-                return None
-            if len(ident.parts) != 1:
-                return None
-            c = ident.parts[0]
-            hits = [i for i, cs in enumerate(colsets) if c in cs]
-            if len(hits) != 1:
-                return None  # missing or ambiguous without a qualifier
-            return "fact" if hits[0] == 0 else "dim"
-
-        # --- first join: one equality between a fact and a dim-1 column.
-        # Later joins may be arbitrary (multi-cond, theta) but must not
-        # touch the fact: they connect dimensions to dimensions, so their
-        # already-emitted SQL stays valid above the pre-aggregate.
-        conds = L.join_meta[0]["conds"]
-        if len(conds) != 1:
-            return False
-        c0 = conds[0]
-        if isinstance(c0, A.JoinCondUsing):
-            return False  # shared-name key: group keys can't be sided
-        if not (isinstance(c0, A.Binary) and c0.op == "=="
-                and isinstance(c0.left, A.Ident)
-                and isinstance(c0.right, A.Ident)):
-            return False
-        by_side = {side_of(c0.left): c0.left, side_of(c0.right): c0.right}
-        if set(by_side) != {"fact", "dim"}:
-            return False
-        fact_key, dim_key = by_side["fact"], by_side["dim"]
-        fk_out = fact_key.parts[-1]
-        dim_key_name = dim_key.parts[-1]
-        dim_a = tables[1][1]
-        # the first join's dim side must belong to dim 1 specifically (it is
-        # the only dim in scope at that point of the original pipeline)
-        if dim_key_name not in colsets[1]:
-            return False
-        if len(dim_key.parts) == 2 and dim_key.parts[0] != dim_a:
-            return False
-        for jm in L.join_meta[1:]:
-            for c in jm["conds"]:
-                if isinstance(c, A.JoinCondUsing):
-                    return False
-                idents = _plain_idents(c, self.funcs)
-                if idents is None or any(side_of(i) != "dim" for i in idents):
-                    return False
-
-        # --- group pipeline: exactly one aggregate
-        pipe = list(t.pipeline)
-        if len(pipe) != 1 or not isinstance(pipe[0], A.Aggregate):
-            return False
-
-        # --- group keys: plain dim-side idents, no collision with fk_out;
-        # resolve each to its owning dim alias for unambiguous emission
-        key_names: list[tuple[str, str]] = []  # (name, owning alias)
-        for k in t.keys:
-            if not isinstance(k, A.Ident) or side_of(k) != "dim":
-                return False
-            if k.parts[-1] == fk_out:
-                return False
-            if len(k.parts) == 2:
-                owner = k.parts[0]
-            else:
-                owner = aliases[[
-                    i for i, cs in enumerate(colsets) if k.parts[0] in cs][0]]
-            key_names.append((k.parts[-1], owner))
-
-        # --- classify WHERE predicates by side
-        fact_wheres, dim_wheres = [], []
-        for ast, sql in zip(L.where_asts, L.wheres):
-            idents = _plain_idents(ast, self.funcs)
-            if idents is None:
-                return False
-            sides = {side_of(i) for i in idents}
-            if None in sides:
-                return False
-            if sides <= {"fact"}:
-                fact_wheres.append(sql)
-            elif sides == {"dim"}:
-                if any(i.parts[-1] == fk_out for i in idents):
-                    return False  # would turn ambiguous above the pre-agg
-                dim_wheres.append(sql)
-            else:
-                return False
-
-        # --- aggregates: decomposable, fact-side args, nothing else
-        em_fact = Emitter(self.d, self.funcs, {fact_a})
-        actx = ExprCtx(mode="aggregate")
-        partials: list[tuple[str, str]] = []   # (name, inner SQL)
-        finals: list[tuple[str, str]] = []     # (out name, outer SQL)
-        for a in pipe[0].assigns:
-            name, expr = _agg_name(a)
-            calls = _decomposable_agg_calls(expr, self.funcs)
-            if calls is None:
-                return False
-            raw_by_id: dict[int, str] = {}
-            for call in calls:
-                for arg in call.args:
-                    arg_idents = _plain_idents(arg, self.funcs)
-                    if arg_idents is None:
-                        return False
-                    if any(side_of(i) != "fact" for i in arg_idents):
-                        return False
-                fn = "avg" if call.name == "average" else call.name
-                if fn == "count":
-                    p = f"_pq_ea{len(partials)}"
-                    inner_core = (
-                        f"COUNT({em_fact.emit(call.args[0], actx)})"
-                        if call.args else "COUNT(*)")
-                    partials.append((p, inner_core))
-                    raw_by_id[id(call)] = f"SUM({self.d.quote(p)})"
-                elif fn in ("sum", "min", "max"):
-                    p = f"_pq_ea{len(partials)}"
-                    arg_sql = em_fact.emit(call.args[0], actx)
-                    partials.append((p, f"{fn.upper()}({arg_sql})"))
-                    raw_by_id[id(call)] = f"{fn.upper()}({self.d.quote(p)})"
-                elif fn == "avg":
-                    arg_sql = em_fact.emit(call.args[0], actx)
-                    ps = f"_pq_ea{len(partials)}"
-                    partials.append((ps, f"SUM({arg_sql})"))
-                    pc = f"_pq_ea{len(partials)}"
-                    partials.append((pc, f"COUNT({arg_sql})"))
-                    raw_by_id[id(call)] = (
-                        f"(SUM({self.d.quote(ps)}) / SUM({self.d.quote(pc)}))")
-                else:
-                    return False
-            finals.append((name, _substitute_nodes(expr, raw_by_id)))
-        if not partials:
-            return False
-
-        # --- emit the pre-aggregate (fact side only)
-        q = self.d.quote
-        fk_sql = em_fact.emit(fact_key, ExprCtx())
-        sel = [f"{fk_sql} AS {q(fk_out)}"] + [
-            f"{sql} AS {q(p)}" for p, sql in partials]
-        inner = [f"SELECT {', '.join(sel)}", f"FROM {L.from_sql}"]
-        if fact_wheres:
-            inner.append("WHERE " + " AND ".join(fact_wheres))
-        inner.append(f"GROUP BY {fk_sql}")
-        inner_sql = "\n".join(inner)
-
-        # --- rebuild the layer: partials ⋈ dims, final agg by dim attrs.
-        # Joins 2..n never reference the fact, so their emitted SQL is
-        # reused verbatim above the pre-aggregate.
-        pre = self.fresh()
-        jm0 = L.join_meta[0]
-        dim_sql = self.d.qualified(jm0["table"])
-        if jm0["alias_explicit"]:
-            dim_sql += f" AS {q(dim_a)}"
-        nl = Layer(from_sql=f"({inner_sql}) AS {q(pre)}",
-                   aliases={pre, *aliases[1:]})
-        nl.joins = [
-            f"JOIN {dim_sql} ON "
-            f"{q(pre)}.{q(fk_out)} = {q(dim_a)}.{q(dim_key_name)}"]
-        nl.joins.extend(L.joins[1:])
-        nl.wheres = dim_wheres
-        nl.group_keys = [(n, f"{q(owner)}.{q(n)}") for n, owner in key_names]
-        em_out = Emitter(self.d, self.funcs, set(nl.aliases))
-        nl.aggs = [(n, em_out.emit(e, ExprCtx(mode="aggregate")))
-                   for n, e in finals]
-        self.layer = nl
-        return True
 
     def _try_distinct_idiom(self, t: A.Group) -> bool:
         """group keys (take 1) over a projection of EXACTLY the keys ->
@@ -997,7 +685,7 @@ class SqlGen:
         self.layer.sorts = []  # recursion discards order
         anchor = self._emit_layer(self.layer)
         rec = self.fresh() + "_loop"
-        sub = SqlGen(self.d, self.funcs, self.cte_names | {rec})
+        sub = SqlGen(self.d, self.funcs)
         sub.layer = Layer(from_sql=self.d.quote(rec), aliases={rec})
         for st in t.pipeline:
             sub.apply(st)
@@ -1051,106 +739,6 @@ class SqlGen:
         if self.layer is None:
             raise CompileError("empty pipeline")
         return self._emit_layer(self.layer)
-
-
-# --------------------------------------------------------------------------
-# eager-aggregation helpers: conservative AST walkers.  They return None on
-# ANY construct they can't prove safe (user funcs, s-/f-strings, window fns),
-# which makes _try_eager_agg fall back to the plain join-then-aggregate form.
-_EAGER_AGG_FNS = {"sum", "count", "min", "max", "average", "avg"}
-
-
-def _plain_idents(e, funcs: dict) -> list | None:
-    """All Ident nodes in the expression, or None if the expression contains
-    anything whose column provenance can't be statically sided (user funcs,
-    raw s-/f-strings, aggregate or window calls)."""
-    if isinstance(e, A.Ident):
-        return [e]
-    if isinstance(e, (A.SString, A.FString)):
-        return None
-    if isinstance(e, A.FuncCall):
-        if (e.name in funcs or e.name in AGG_FNS or e.name in WINDOW_FNS
-                or e.name == "count"):
-            return None
-        out = []
-        for sub in list(e.args) + list(e.named.values()):
-            got = _plain_idents(sub, funcs)
-            if got is None:
-                return None
-            out.extend(got)
-        return out
-    out = []
-    for child in _children(e):
-        got = _plain_idents(child, funcs)
-        if got is None:
-            return None
-        out.extend(got)
-    return out
-
-
-def _decomposable_agg_calls(e, funcs: dict, inside: bool = False) -> list | None:
-    """Aggregate FuncCall nodes inside an aggregate-assign expression, or
-    None when the expression can't be eagerly decomposed: a non-decomposable
-    aggregate (stddev, count_distinct, percentile…), a window or user func,
-    an s-/f-string, or a bare column reference OUTSIDE any aggregate (its
-    value would be row-dependent in the rewritten outer query)."""
-    if isinstance(e, A.Ident):
-        return [] if inside else None
-    if isinstance(e, A.Literal):
-        return []
-    if isinstance(e, (A.SString, A.FString)):
-        return None
-    if isinstance(e, A.FuncCall):
-        if e.name in funcs or e.name in WINDOW_FNS:
-            return None
-        if e.name in AGG_FNS or e.name == "count":
-            if inside or e.named or e.name not in _EAGER_AGG_FNS:
-                return None
-            if e.name == "count":
-                if len(e.args) > 1:
-                    return None
-            elif len(e.args) != 1:
-                return None
-            for a in e.args:
-                if _decomposable_agg_calls(a, funcs, inside=True) is None:
-                    return None
-            return [e]
-        out = []
-        for sub in list(e.args) + list(e.named.values()):
-            got = _decomposable_agg_calls(sub, funcs, inside)
-            if got is None:
-                return None
-            out.extend(got)
-        return out
-    out = []
-    for child in _children(e):
-        got = _decomposable_agg_calls(child, funcs, inside)
-        if got is None:
-            return None
-        out.extend(got)
-    return out
-
-
-def _substitute_nodes(e, raw_by_id: dict):
-    """Rebuild an expression tree, replacing nodes listed in raw_by_id
-    (keyed by id()) with raw-SQL SString leaves."""
-    if id(e) in raw_by_id:
-        return A.SString([raw_by_id[id(e)]])
-    if isinstance(e, A.Binary):
-        return A.Binary(e.op, _substitute_nodes(e.left, raw_by_id),
-                        _substitute_nodes(e.right, raw_by_id))
-    if isinstance(e, A.Unary):
-        return A.Unary(e.op, _substitute_nodes(e.expr, raw_by_id))
-    if isinstance(e, A.FuncCall):
-        return A.FuncCall(
-            e.name,
-            [_substitute_nodes(a, raw_by_id) for a in e.args],
-            {k: _substitute_nodes(v, raw_by_id) for k, v in e.named.items()})
-    if isinstance(e, A.CaseExpr):
-        return A.CaseExpr([
-            (None if c is None else _substitute_nodes(c, raw_by_id),
-             _substitute_nodes(v, raw_by_id)) for c, v in e.arms])
-    return e
 
 
 # ---------------------------------------------------------------------------
@@ -1208,8 +796,7 @@ def _children(e):
     if isinstance(e, A.Assign):
         return [e.expr]
     if isinstance(e, A.ListLit):
-        # without this, identifiers inside `in [...]` are invisible to
-        # _plain_idents/_expr_mentions — the eager-agg classifier would
-        # misfile a dim-referencing in-list filter as fact-only
+        # identifiers inside `in [...]` (a derive that mentions its own
+        # name in an in-list shadows that column)
         return list(e.items)
     return []

@@ -17,7 +17,8 @@ def get_spark(app_name: str = "prql-query-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: one task slot per CPU this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get("PQ_SHUFFLE_PARTITIONS", cpus))
     # Scan split size stays at Spark's 128 MB default: the local testdata

@@ -192,70 +192,33 @@ def read_source(spark: SparkSession, path: str, fmt: str | None = None,
 
 
 def register_sources(spark: SparkSession, sources: list[str],
-                     schema: str | None = None
-                     ) -> list[tuple[str, str | None, DataFrame | None]]:
+                     schema: str | None = None) -> list[str]:
     """Register each `alias=path` (or bare path) as a temp view.
 
-    Returns (table name, path, DataFrame) per entry in order, path and
-    DataFrame None for a passthrough table; the last name drives
-    auto-`from` insertion (reference main.rs:146-148 uses sources.last()).
+    Returns the table names in order, a passthrough table's included; the
+    last name drives auto-`from` insertion (reference main.rs:146-148 uses
+    sources.last()).
     schema: optional DDL applied to every csv/ndjson source (--schema).
     Self-describing sources in the same list (parquet, avro, delta, ...)
     are unaffected — a csv joined against a parquet is the normal case —
     but if NO listed source can take the schema, fail loudly instead of
     silently ignoring the flag.
     """
-    out: list[tuple[str, str | None, DataFrame | None]] = []
+    out: list[str] = []
     schema_used = False
     for name, path in standardise_sources(sources):
-        df = None
         if path is not None:
             fmt = infer_format(path)
             src_schema = schema if fmt in ("csv", "json") else None
             schema_used = schema_used or src_schema is not None
-            df = read_source(spark, path, fmt, schema=src_schema)
-            df.createOrReplaceTempView(name)
-        out.append((name, path, df))
+            read_source(spark, path, fmt, schema=src_schema
+                        ).createOrReplaceTempView(name)
+        out.append(name)
     if schema is not None and not schema_used:
         raise SourceError(
             "--schema supplied but no csv/ndjson source in the list "
             "(self-describing formats carry their own)")
     return out
-
-
-def source_catalog(
-    tables: list[tuple[str, str | None, list[str] | None]],
-) -> dict[str, dict]:
-    """`compile_prql` catalog keywords (schemas, table_rows, table_bytes)
-    for (table, path, columns) triples, feeding the compiler's
-    schema-dependent rewrites (eager aggregation and its reduction and
-    broadcast-regime cost gates).  Columns are taken as given, else from
-    the parquet footer; row counts and bytes come only from the footers
-    of a local `.parquet` file or directory of parquet part files.  A
-    table without cheap exact stats is simply absent, which makes the
-    cost gates hold the rewrite back (conservative by construction).
-    Reads footers only: no Spark."""
-    import pyarrow.parquet as papq
-
-    schemas: dict[str, list] = {}
-    rows: dict[str, int] = {}
-    nbytes: dict[str, int] = {}
-    for name, path, columns in tables:
-        parts: list[str] = []
-        if path and path.endswith(".parquet"):
-            if os.path.isfile(path):
-                parts = [path]
-            elif os.path.isdir(path):
-                parts = sorted(os.path.join(path, f) for f in os.listdir(path)
-                               if f.endswith(".parquet"))
-        if parts:
-            footers = [papq.ParquetFile(p) for p in parts]
-            columns = columns or footers[0].schema_arrow.names
-            rows[name] = sum(f.metadata.num_rows for f in footers)
-            nbytes[name] = sum(os.path.getsize(p) for p in parts)
-        if columns:
-            schemas[name] = list(columns)
-    return {"schemas": schemas, "table_rows": rows, "table_bytes": nbytes}
 
 
 def _arrow_list_field(arrow_schema, name: str):

@@ -54,8 +54,7 @@ for master in ("local[1]", "local-cluster[2,2,1024]"):
 
     # compiled flagship (joins + window-over-aggregate + s-strings)
     flag = spark.sql(compile_prql(
-        entrymod.PRQL_QUERIES["q_flagship_monthly"], "spark",
-        **entrymod._compile_kwargs(sf))).collect()
+        entrymod.PRQL_QUERIES["q_flagship_monthly"], "spark")).collect()
     out["flagship"] = [tuple(r) for r in flag]
 
     # BM25 (HOF filter closure over a captured term list, window df,

@@ -344,7 +344,7 @@ def test_cli_parquet_source_with_ns_timestamps(spark, tmp_path, capsys):
 
 
 def test_cli_exec_compiles_once(spark, tmp_path, capsys, monkeypatch):
-    """The exec path compiles once, after registration, with the catalog."""
+    """The exec path compiles once, with no table catalog."""
     import prql_query_spark
     import pq
 
@@ -360,31 +360,28 @@ def test_cli_exec_compiles_once(spark, tmp_path, capsys, monkeypatch):
     csv.write_text("a,b\n1,x\n2,y\n")
     rc = pq.main(["-f", f"d={csv}", "aggregate [n = count]"])
     assert rc == 0 and "| 2 " in capsys.readouterr().out
-    assert len(calls) == 1 and calls[0]["schemas"] == {"d": ["a", "b"]}
+    assert len(calls) == 1 and calls[0] == {}  # no keyword arguments
 
 
-def test_engine_catalog_matches_entry_catalog(spark):
-    """PrqlEngine and __spark_entry__ build the compiler catalog through
-    the same helper: columns from the registered frames equal the
-    footer columns, and parquet row counts and bytes agree."""
-    import __spark_entry__ as entry
-    from prql_query_spark.engine import PrqlEngine
+def test_cli_prql_error_before_session(tmp_path, monkeypatch):
+    """A PRQL error is reported before any Spark session starts, so a
+    typo costs no session start (the reference compiles first too)."""
+    import pq
+    from prql_query_spark.compiler.parser import ParseError
+    from prql_query_spark.engine import session
 
-    eng = PrqlEngine(spark)
-    eng.add_sources([f"{t}={SF}/{t}.parquet" for t in TABLES])
-    # the views now hold sf0.001: make __spark_entry__._reg re-register
-    entry._REG_CURRENT.pop(spark.sparkContext.applicationId, None)
-    assert eng.catalog() == entry._compile_kwargs(SF)
+    def no_session(*a, **kw):
+        raise AssertionError("Spark session started before compiling")
 
-    # passthrough tables: columns from the session catalog, absent if unknown
-    spark.range(1).createOrReplaceTempView("pt_view")
-    eng = PrqlEngine(spark)
-    eng.add_sources(["pt_view", "main.absent"])
-    assert eng.catalog()["schemas"] == {"pt_view": ["id"]}
+    monkeypatch.setattr(session, "get_spark", no_session)
+    csv = tmp_path / "d.csv"
+    csv.write_text("a,b\n1,x\n")
+    with pytest.raises(ParseError):
+        pq.main(["-f", f"d={csv}", "from d | select [("])
 
 
-# sha256[:16] of the Spark SQL the benchmark's olap_read queries compile to
-# against the sf0.01 catalog; a change here changes what the benchmark runs
+# sha256[:16] of the Spark SQL the benchmark's olap_read queries compile
+# to; a change here changes what the benchmark runs
 OLAP_SQL_SHA = {
     "q_agg_q1": "f2d3ad84e59e791e",
     "q_join_agg_q5": "6a7bc0ac676ea6d8",
@@ -402,9 +399,8 @@ def test_olap_queries_compile_unchanged():
 
     import __spark_entry__ as entry
 
-    kw = entry._compile_kwargs(SF.replace("sf0.001", "sf0.01"))
     got = {q: hashlib.sha256(compile_prql(
-        entry.PRQL_QUERIES[q], "spark", **kw).encode()).hexdigest()[:16]
+        entry.PRQL_QUERIES[q], "spark").encode()).hexdigest()[:16]
         for q in OLAP_SQL_SHA}
     assert got == OLAP_SQL_SHA
 
@@ -643,157 +639,6 @@ def test_int_sum_no_cast_for_unknown_column_type():
     assert "CAST(SUM" not in sql
 
 
-# ----------------------------------------------------- eager aggregation
-_EA_SCHEMAS = {
-    "orders": ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
-               "o_orderstatus"],
-    "customer": ["c_custkey", "c_name", "c_nationkey", "c_acctbal"],
-}
-
-_EA_PRQL = """
-from orders
-join customer [o_custkey == c_custkey]
-group [c_name] (aggregate [spend = round 2 (sum o_totalprice)])
-sort [-spend, c_name]
-take 10
-"""
-
-
-def test_eager_agg_fires_with_schemas():
-    """Group-by pushdown below a fact-dim join (sqlgen._try_eager_agg):
-    with catalog schemas the spark dialect pre-aggregates the fact by its
-    join key, then finishes over the dim attributes."""
-    sql = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS)
-    # pre-aggregate subquery grouped by the fact join key...
-    assert "GROUP BY `o_custkey`" in sql
-    # ...joined to the dimension and re-aggregated by the dim attribute
-    assert "GROUP BY `customer`.`c_name`" in sql
-    assert sql.index("GROUP BY `o_custkey`") < sql.index("JOIN `customer`")
-
-
-def test_eager_agg_needs_schemas_and_spark_dialect():
-    plain = compile_prql(_EA_PRQL, "spark")
-    assert "GROUP BY `o_custkey`" not in plain  # no schemas -> plain form
-    duck = compile_prql(_EA_PRQL, "duckdb", schemas=_EA_SCHEMAS)
-    assert 'GROUP BY "o_custkey"' not in duck  # oracle stays un-rewritten
-
-
-def test_eager_agg_splits_wheres_and_decomposes(con):
-    """Fact-side filters land in the pre-aggregate, dim-side filters above
-    the join; count/average decompose into partials."""
-    prql = """
-from orders
-join customer [o_custkey == c_custkey]
-filter o_totalprice > 100
-filter c_acctbal > 0
-group [c_name] (aggregate [n = count, m = average o_totalprice])
-sort [c_name]
-"""
-    sql = compile_prql(prql, "spark", schemas=_EA_SCHEMAS)
-    inner = sql.split("JOIN")[0]
-    assert "o_totalprice` > 100" in inner        # pushed into the pre-agg
-    assert "c_acctbal" not in inner               # dim filter stays above
-    assert "COUNT(*)" in inner and "SUM(`o_totalprice`)" in inner
-    assert "SUM(`_pq_ea0`)" in sql                # count finalizes as SUM
-    assert "/ SUM(" in sql                        # average = sum/count
-
-
-@pytest.mark.parametrize("prql,why", [
-    ("from orders | join side:left customer [o_custkey == c_custkey] | "
-     "group [c_name] (aggregate [n = count])", "outer join"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "group [c_name] (aggregate [sd = stddev o_totalprice])",
-     "non-decomposable aggregate"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "group [o_orderstatus] (aggregate [n = count])", "fact-side group key"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "group [c_name] (aggregate [n = count_distinct o_orderkey])",
-     "count_distinct"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "group [c_name] (aggregate [m = max c_acctbal])", "dim-side agg arg"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "filter o_totalprice > c_acctbal | "
-     "group [c_name] (aggregate [n = count])", "mixed-side predicate"),
-    ("from orders | join customer [o_custkey == c_custkey] | "
-     "group [c_name] (aggregate [x = sum s\"o_totalprice\"])", "s-string"),
-])
-def test_eager_agg_bails_to_plain_form(prql, why):
-    sql = compile_prql(prql, "spark", schemas=_EA_SCHEMAS)
-    assert "_pq_ea" not in sql, why
-    # the plain form keeps the single join-then-aggregate SELECT
-    assert sql.count("GROUP BY") <= 1, why
-
-
-def test_eager_agg_multi_dim_chain():
-    """Joins 2..n that never reference the fact are reused verbatim above
-    the pre-aggregate; group keys resolve to their owning dim alias."""
-    schemas = dict(_EA_SCHEMAS, nation=["n_nationkey", "n_name"])
-    prql = """
-from orders
-join customer [o_custkey == c_custkey]
-join nation [c_nationkey == n_nationkey]
-group [n_name] (aggregate [spend = sum o_totalprice])
-sort [n_name]
-"""
-    sql = compile_prql(prql, "spark", schemas=schemas)
-    assert "GROUP BY `o_custkey`" in sql
-    assert "JOIN `nation` ON (`c_nationkey` = `n_nationkey`)" in sql
-    assert "GROUP BY `nation`.`n_name`" in sql
-    # a chain where a LATER join touches the fact must bail
-    prql_bad = """
-from orders
-join customer [o_custkey == c_custkey]
-join nation [o_orderkey == n_nationkey]
-group [n_name] (aggregate [spend = sum o_totalprice])
-"""
-    assert "_pq_ea" not in compile_prql(prql_bad, "spark", schemas=schemas)
-
-
-def test_eager_agg_row_count_gate():
-    """Reduction gate: the pre-aggregate's surviving output is bounded by
-    |dim1|, so |fact|/|dim1| must clear EAGER_MIN_REDUCTION."""
-    fires = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                         table_rows={"orders": 1500, "customer": 150})
-    assert "_pq_ea" in fires  # 10x reduction
-    held = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                        table_rows={"orders": 600, "customer": 150})
-    assert "_pq_ea" not in held  # 4x: keep the pure broadcast plan
-    missing = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                           table_rows={"orders": 1500})
-    assert "_pq_ea" not in missing  # unknown dim rows: stay conservative
-
-
-def test_eager_agg_broadcast_regime_gate():
-    """Join-regime gate (measured at sf1, SCALING.md): against a
-    broadcastable dim the plain plan never shuffles the fact and its
-    map-side partial aggregate already reduces before the one exchange —
-    eager aggregation only fires when dim1 is past the broadcast
-    threshold, i.e. when the plain join would shuffle the fact table."""
-    rows = {"orders": 1500, "customer": 150}
-    big_dim = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                           table_rows=rows,
-                           table_bytes={"orders": 1 << 32,
-                                        "customer": 64 << 20})
-    assert "_pq_ea" in big_dim  # 64 MB dim: shuffle join, rewrite pays
-    small_dim = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                             table_rows=rows,
-                             table_bytes={"orders": 1 << 32,
-                                          "customer": 1 << 20})
-    assert "_pq_ea" not in small_dim  # 1 MB dim broadcasts: stay plain
-    unknown = compile_prql(_EA_PRQL, "spark", schemas=_EA_SCHEMAS,
-                           table_rows=rows,
-                           table_bytes={"orders": 1 << 32})
-    assert "_pq_ea" not in unknown  # unknown dim size: stay conservative
-    # under the real testdata catalog every dim is tiny/broadcastable, so
-    # NOTHING fires through the engine's default compile path — the plain
-    # broadcast plans measured faster at every scale tried
-    import __spark_entry__ as entry
-    kw = entry._compile_kwargs("/root/testdata/sf0.001")
-    for name in ("q_join_agg_q5", "q_topk_customers"):
-        assert "_pq_ea" not in compile_prql(
-            entry.PRQL_QUERIES[name], "spark", **kw)
-
-
 def test_cli_glob_sources_and_schema(spark, tmp_path, capsys):
     """Two reference-TODO deliveries (TODO.md:38-39): glob patterns in
     --from (view named after the glob's parent directory) and a
@@ -855,8 +700,7 @@ def test_approx_percentile_fn(spark, sf_dir):
     Spark APPROX_PERCENTILE, DuckDB approx_quantile (t-digest).  The two
     sketches differ, so this must NEVER sit in an exact-hash oracle row;
     the contract tested here is that on EACH engine the approx result
-    lands within 2% of that engine's own exact percentile, and that the
-    compiler keeps the fn out of the eager-aggregation whitelist."""
+    lands within 2% of that engine's own exact percentile."""
     import os
 
     import duckdb
@@ -888,11 +732,6 @@ sort [o_orderstatus]
             assert abs(approx - ex) <= 0.02 * max(abs(ex), 1.0), \
                 (status, approx, ex)
 
-    # not eligible for the eager-aggregation rewrite (sketches don't
-    # re-merge through the dim-join multiplicity argument)
-    from prql_query_spark.compiler.sqlgen import _EAGER_AGG_FNS
-    assert "approx_percentile" not in _EAGER_AGG_FNS
-
 
 def test_approx_count_distinct_fn(spark, sf_dir):
     """`approx_count_distinct` (round 7): the sketch cardinality
@@ -900,8 +739,7 @@ def test_approx_count_distinct_fn(spark, sf_dir):
     an exact-hash value.  Contract: on EACH engine the estimate lands
     within 5% of that engine's own exact count-distinct (5% = Spark's
     default rsd parameter; observed 2.65% Spark / 0.5% DuckDB on the
-    fixtures), and the fn stays out of the eager-agg whitelist
-    (cardinality sketches don't re-merge through join multiplicity)."""
+    fixtures)."""
     import os
 
     import duckdb
@@ -931,9 +769,6 @@ sort [l_returnflag]
     for eng in (sp, du):
         for flag, (approx, ex) in eng.items():
             assert abs(approx - ex) <= 0.05 * max(ex, 1), (flag, approx, ex)
-
-    from prql_query_spark.compiler.sqlgen import _EAGER_AGG_FNS
-    assert "approx_count_distinct" not in _EAGER_AGG_FNS
 
 
 def test_source_time_travel_suffix(spark, tmp_path):

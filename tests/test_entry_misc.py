@@ -37,3 +37,24 @@ def test_driver_window_composition():
     assert names[:n] == entrymod.DRIVER_ORDER
     missing = [x for x in entrymod.DRIVER_ORDER if x not in oracles]
     assert not missing, f"window rows without oracle: {missing}"
+
+
+# The __spark_entry__ contract, pinned: the queries() names in dict order
+# and the DuckDB text of every oracle.  A change to either changes what the
+# correctness gate audits, so it must be deliberate (update both digests).
+QUERY_KEYS_SHA = "768d6caaad3635e593204bb1c17bc6f5baddcce0b73f1a0663af6ed7aad69412"
+ORACLE_SQL_SHA = "283741ee2f5dbb5a836180ffce65b48103f60cc07e9ed635b783ce5a3fef1bc0"
+
+
+def test_entry_contract_pinned():
+    import hashlib
+
+    def sha(s: str) -> str:
+        return hashlib.sha256(s.encode()).hexdigest()
+
+    keys = list(entrymod.queries())
+    oracles = entrymod.oracle_sql()
+    assert len(keys) == 235 and len(oracles) == 235
+    assert sha("\n".join(keys)) == QUERY_KEYS_SHA
+    assert sha("\n".join(f"{k}\t{sha(v)}" for k, v in oracles.items())) \
+        == ORACLE_SQL_SHA

@@ -45,13 +45,19 @@ def con():
     return c
 
 
-def test_no_oracle_returns_decimal(con):
-    oracles = entrymod.oracle_sql()
-    assert oracles, "oracle_sql() is empty?"
+@pytest.fixture(scope="module")
+def oracle_schemas(con):
+    """name -> Arrow output schema of every oracle, each executed in full
+    once and shared by the audits below."""
+    return {name: con.execute(sql).arrow().schema
+            for name, sql in entrymod.oracle_sql().items()}
+
+
+def test_no_oracle_returns_decimal(oracle_schemas):
+    assert oracle_schemas, "oracle_sql() is empty?"
     offenders = []
-    for name, sql in oracles.items():
-        tbl = con.execute(sql).arrow()
-        for f in tbl.schema:
+    for name, schema in oracle_schemas.items():
+        for f in schema:
             if pa.types.is_decimal(f.type):
                 offenders.append((name, f.name, str(f.type)))
     assert not offenders, (
@@ -95,16 +101,15 @@ def test_gate_would_catch_decimal_round(con):
     assert pa.types.is_decimal(tbl.schema.field("r").type)
 
 
-def test_no_oracle_returns_float32(con):
+def test_no_oracle_returns_float32(oracle_schemas):
     """Spark-side aggregates (avg/round/stddev/sum-of-double) all emit
     float64; a float32 column in an oracle's OUTPUT schema would hash-
     mismatch against it.  Raw embedding payloads are list<float32> by
     design — only flag top-level float32 scalars, which can only come from
     an un-promoted cast."""
     offenders = []
-    for name, sql in entrymod.oracle_sql().items():
-        tbl = con.execute(sql).arrow()
-        for f in tbl.schema:
+    for name, schema in oracle_schemas.items():
+        for f in schema:
             if pa.types.is_float32(f.type):
                 offenders.append((name, f.name))
     assert not offenders, f"float32 scalar oracle columns: {offenders}"

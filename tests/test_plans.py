@@ -620,34 +620,6 @@ def test_equidepth_above_cutoff_has_no_global_sort(spark, sf_dir):
     assert "ntile" in plan2.lower()
 
 
-def test_eager_agg_plan_and_values(spark, reg, sf_dir):
-    """Eager aggregation (sqlgen._try_eager_agg): the schema-aware compile
-    of q_topk_customers must pre-aggregate orders by the int join key
-    below the customer join — at scale the join probe input shrinks from
-    |fact| to ndv(fk) and the string-key hash-agg runs over ndv(fk) rows —
-    and must return exactly the rows of the un-rewritten plain form."""
-    import __spark_entry__ as entry
-    from prql_query_spark import compile_prql
-
-    prql = entry.PRQL_QUERIES["q_topk_customers"]
-    schemas = entry._schemas(spark, sf_dir)
-    sql = compile_prql(prql, "spark", schemas=schemas)
-    plain_sql = compile_prql(prql, "spark")
-    assert sql != plain_sql  # the rewrite fired
-
-    plan = _plan(spark, spark.sql(sql), "simple")
-    # two-level aggregation: pre-agg by o_custkey below the join, final
-    # agg by c_name above it (4 HashAggregates incl. partial/final pairs)
-    assert plan.count("HashAggregate") >= 4
-    assert re.search(r"HashAggregate.*keys=\[o_custkey", plan)
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-    got = [tuple(r) for r in spark.sql(sql).collect()]
-    want = [tuple(r) for r in spark.sql(plain_sql).collect()]
-    assert got == want
-
-
 def test_bm25_filters_before_aggregation(spark, reg, sf_dir):
     """BM25 retrieval (operators/retrieval.py): the (doc, term) explode
     must be filtered to the query's literal terms BEFORE any aggregate —
@@ -678,58 +650,6 @@ def test_bm25_filters_before_aggregation(spark, reg, sf_dir):
     # the top hit really contains a query term
     top = docs.filter(F.col("doc_id") == rows[0]["doc_id"]).collect()[0]
     assert any(t in top["text"].lower() for t in ("data", "quality", "model"))
-
-
-@pytest.mark.parametrize("seed", [1, 2, 3, 4, 5, 6])
-def test_eager_agg_randomized_differential(spark, seed):
-    """Differential fuzz for the eager-aggregation rewrite: random fact
-    (NULL fks, NULL measures) against a dim with DUPLICATE join keys
-    (the multiplicity case the Yan-Larson proof hinges on), random
-    filters on both sides, all decomposable aggregates at once.  The
-    rewritten plan must reproduce the plain plan's rows exactly.
-
-    Double sums/averages go through the repo-wide round-in-DECIMAL
-    convention: the rewrite changes the SUMMATION TREE (partials per fk
-    first), which drifts bare double sums by an ulp — the same
-    non-associativity class as Spark's own partition-order
-    nondeterminism, and the reason FIXTURES.md rounds every money
-    aggregate.  Integer counts/min/max are exact unrounded."""
-    import random
-
-    from prql_query_spark import compile_prql
-
-    rnd = random.Random(seed)
-    fact = [(rnd.choice([None, *range(8)]),
-             rnd.choice([None, rnd.randint(0, 100)]),
-             round(rnd.uniform(0, 50), 2))
-            for _ in range(60)]
-    # duplicate pks on purpose: two dim rows share key 3, with different
-    # and with identical attribute values
-    dim = [(k, f"g{rnd.randint(0, 2)}") for k in range(8)]
-    dim += [(3, "g0"), (3, "g1"), (None, "g2")]
-    spark.createDataFrame(fact, "fk int, qty int, price double") \
-        .createOrReplaceTempView("ea_fact")
-    spark.createDataFrame(dim, "pk int, grp string") \
-        .createOrReplaceTempView("ea_dim")
-
-    prql = """
-from ea_fact
-join ea_dim [fk == pk]
-filter price < 45
-filter grp != 'zzz'
-group [grp] (aggregate [
-    s = round 2 (sum price), n = count, nq = count qty,
-    mx = max price, mn = min qty, a = round 4 (average price),
-])
-sort [grp]
-"""
-    schemas = {"ea_fact": ["fk", "qty", "price"], "ea_dim": ["pk", "grp"]}
-    plain_sql = compile_prql(prql, "spark")
-    eager_sql = compile_prql(prql, "spark", schemas=schemas)
-    assert "_pq_ea" in eager_sql and "_pq_ea" not in plain_sql
-    plain = [tuple(r) for r in spark.sql(plain_sql).collect()]
-    eager = [tuple(r) for r in spark.sql(eager_sql).collect()]
-    assert eager == plain
 
 
 def _singlepartition_feeds_only_limits(plan: str) -> list[str]:
@@ -890,41 +810,6 @@ def test_bm25_batch_no_corpus_single_partition(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     rows = df.collect()
     assert {r["query_id"] for r in rows} == {1, 2}
-
-
-def test_eager_agg_sees_idents_inside_in_lists(spark):
-    """_children(ListLit) regression (round-6 ADVICE): a WHERE whose only
-    dim-side reference hides inside `in [...]` must be VISIBLE to the
-    eager-agg side classifier — before the fix the walker skipped list
-    items, misfiled the predicate as fact-only, and pushed it into the
-    fact pre-aggregate where the dim column doesn't resolve
-    (AnalysisException at best, silent wrong binding if the name also
-    existed fact-side).  Mixed-side predicate => the rewrite must bail
-    to the plain join-then-aggregate plan, which must still run and
-    match the schema-less compile exactly."""
-    from prql_query_spark import compile_prql
-
-    spark.createDataFrame(
-        [(k % 4, k % 7, float(k)) for k in range(40)],
-        "fk int, qty int, price double").createOrReplaceTempView("il_fact")
-    spark.createDataFrame(
-        [(k, f"g{k % 2}") for k in range(4)],
-        "pk int, grp string").createOrReplaceTempView("il_dim")
-
-    prql = """
-from il_fact
-join il_dim [fk == pk]
-filter qty in [pk, 6]
-group [grp] (aggregate [n = count, s = sum qty])
-sort [grp]
-"""
-    schemas = {"il_fact": ["fk", "qty", "price"], "il_dim": ["pk", "grp"]}
-    plain_sql = compile_prql(prql, "spark")
-    eager_sql = compile_prql(prql, "spark", schemas=schemas)
-    assert "_pq_ea" not in eager_sql  # the rewrite bailed (mixed sides)
-    got = [tuple(r) for r in spark.sql(eager_sql).collect()]
-    want = [tuple(r) for r in spark.sql(plain_sql).collect()]
-    assert got == want and len(got) > 0
 
 
 def test_ann_index_probe_pushes_cell_filter(spark, sf_dir, tmp_path):

@@ -20,7 +20,6 @@ def bench_dataframes(spark, sf_dir):
     """(name -> DataFrame) for the exact computations bench.py times."""
     from pyspark.sql import functions as F
 
-    compile_kwargs = entrymod._compile_kwargs(sf_dir)
     prql = {
         "q_take": "from lineitem | take 5",
         "q_agg": entrymod.PRQL_QUERIES["q_agg_q1"],
@@ -42,8 +41,7 @@ take 10
     }
     out = {}
     for name, q in prql.items():
-        out[name] = (lambda s=compile_prql(q, "spark", **compile_kwargs):
-                     spark.sql(s))
+        out[name] = lambda s=compile_prql(q, "spark"): spark.sql(s)
 
     qs = entrymod.queries()
     ext = ["x_dedup_exact", "x_token_count", "x_cosine_topk",

@@ -130,12 +130,12 @@ QUERIES = [
      "does not dedupe common subplans); N/avgdl is a narrow no-explode "
      "scan broadcast as one row; top-k is TakeOrderedAndProject."),
     ("x_eager_rollup", "x",
-     "Eager aggregation (compiler rewrite, forced here past its cost "
-     "gates): orders pre-aggregates by o_custkey BELOW the customer⋈"
-     "nation chain — at scale the join consumes ndv(custkey) partial "
-     "rows instead of the fact table.  sum/count/average/max all "
-     "decompose into partials; the plain twin is what the DuckDB oracle "
-     "runs."),
+     "Star rollup (orders by customer nation, sum/count/average/max) "
+     "compiled plainly: join then aggregate, as the DuckDB oracle runs "
+     "it.  Both dimension joins are BroadcastHashJoins, so the orders "
+     "fact never shuffles; its partial hash aggregate reduces each task's "
+     "output before the n_name group-by exchange, and the last exchange "
+     "sorts the at most 25 nation rows."),
     ("x_hybrid_search", "x",
      "Hybrid RRF retrieval (round-6 re-plan): BOTH branches end in "
      "TakeOrderedAndProject — the lexical list via bm25_topk's limit, "
