@@ -47,12 +47,14 @@ def _spread(df: DataFrame) -> DataFrame:
     time per query construction).  For file-scan-backed inputs the decision
     derives from file bytes instead (``inputFiles()`` reads the analyzed
     plan only): Spark's split width is at most ``maxPartitionBytes``, so
-    ``ceil(bytes / maxPartitionBytes) >= target`` proves the scan is already
-    wide enough (never under-spreads), and a conservative upper bound on
-    split count (every file padded with openCostInBytes, packed at the
-    emulated maxSplitBytes) proves under-partitioning (never leaves a tiny
-    input serialized).  The ambiguous middle band and non-file inputs keep
-    the exact ``.rdd`` probe."""
+    for splittable files (parquet, orc) ``ceil(bytes / maxPartitionBytes)
+    >= target`` proves the scan is already wide enough (never
+    under-spreads); a non-splittable file (gzip CSV/JSON) is one split
+    whatever its size, so it never takes that shortcut.  A conservative
+    upper bound on split count (every file padded with openCostInBytes,
+    packed at the emulated maxSplitBytes) proves under-partitioning (never
+    leaves a tiny input serialized).  The ambiguous middle band and
+    non-file inputs keep the exact ``.rdd`` probe."""
     import math
 
     spark = df.sparkSession
@@ -77,7 +79,8 @@ def _spread(df: DataFrame) -> DataFrame:
         conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
         maxpb = conf.filesMaxPartitionBytes()
         open_cost = conf.filesOpenCostInBytes()
-        if math.ceil(total / maxpb) >= target:
+        splittable = all(p.endswith((".parquet", ".orc")) for p in files)
+        if splittable and math.ceil(total / maxpb) >= target:
             return df  # provably already >= target scan partitions
         bytes_per_core = (total + len(sizes) * open_cost) / max(target, 1)
         max_split = min(maxpb, max(open_cost, bytes_per_core))

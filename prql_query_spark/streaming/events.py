@@ -2,7 +2,7 @@
 
 The reference is batch-only (SURVEY.md §2.B: "Streaming operators: none"),
 so this module is extension tier: the same windowed aggregations exposed both
-as batch DataFrame ops (oracle-checkable) and as readStream pipelines with
+as batch DataFrame ops (oracle-checkable) and as streaming pipelines with
 watermarks for late data.
 """
 
@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
+
+from prql_query_spark.streaming.microbatch import (
+    file_stream, read_batches, start_batches, write_batch)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -66,38 +69,12 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 def _event_stream(spark: SparkSession, events_path: str,
                   watermark: str | None):
-    """readStream over an events parquet path with the ns-timestamp fix and
-    bare-file handling shared by all streaming twins.  Pass watermark=None
-    when the caller attaches its own (e.g. on a renamed column for a
-    stream-stream join — Spark disallows redefining a watermark)."""
-    import os
-    import tempfile
-
-    from prql_query_spark.engine.sources import load_parquet
-
-    # load_parquet handles ns-timestamp columns (reads them as long under the
-    # nanosAsLong legacy conf); mirror its conversion on the stream so the
-    # watermark column is a real TIMESTAMP.  Must run against the bare file
-    # so the pyarrow footer probe sees it.
-    batch = load_parquet(spark, events_path)
-    raw_schema = spark.read.parquet(events_path).schema
-
-    # FileStreamSource requires a directory; wrap a bare file in a temp dir
-    # via symlink (at scale the source is a real directory/Kafka anyway).
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="pq_stream_")
-        os.symlink(events_path, os.path.join(d, os.path.basename(events_path)))
-        events_path = d
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    for name, field in zip(batch.schema.fieldNames(), batch.schema.fields):
-        raw = raw_schema[name].dataType
-        if raw != field.dataType and str(field.dataType) == "TimestampType()":
-            stream = stream.withColumn(
-                name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
+    """`microbatch.file_stream` over an events parquet path, one file per
+    micro-batch, with `ts` as a watermarkable TIMESTAMP.  Pass
+    watermark=None when the caller attaches its own (e.g. on a renamed
+    column for a stream-stream join — Spark disallows redefining a
+    watermark)."""
+    stream = file_stream(spark, events_path, max_files_per_trigger=1)
     # Watermarks require a session-tz TIMESTAMP; parquet written with
     # isAdjustedToUTC=false reads back as TIMESTAMP_NTZ, so cast it.
     if isinstance(stream.schema["ts"].dataType, TimestampNTZType):
@@ -126,7 +103,7 @@ def stream_tumbling_counts(
     checkpoint: str | None = None,
     queryName: str = "pq_stream_counts",
 ):
-    """Streaming twin of `tumbling_counts`: file-source readStream with a
+    """Streaming twin of `tumbling_counts`: file-stream source with a
     watermark for late data.  Returns the started StreamingQuery writing to
     a memory sink (caller stops it).  At scale: swap source/sink for
     Kafka/Delta; the middle of the pipeline is unchanged.
@@ -194,15 +171,13 @@ def stream_to_warehouse(
     queryName: str = "pq_stream_sink",
 ):
     """Stream windowed aggregates into a partitioned parquet 'warehouse'
-    table via foreachBatch, idempotently.
+    table, idempotently.
 
-    Exactly-once story without Delta: each microbatch overwrites only its
-    own `_batch_id=<id>` partitions (dynamic partitionOverwriteMode), so a
-    replayed batch after a crash rewrites the same files instead of
-    duplicating rows — the checkpoint's batch ids are the transaction log.
-    Readers get exact-once rows with `read_warehouse` (which just drops the
-    bookkeeping column).  At scale the same pattern lands on a real table
-    format; the foreachBatch body is what MERGE would be.
+    Exactly-once story without Delta: each microbatch lands through
+    `microbatch.write_batch`, so a replayed batch after a crash rewrites
+    its own partition instead of duplicating rows.  Readers get exact-once
+    rows with `read_warehouse`.  At scale the same pattern lands on a real
+    table format; the per-batch write is what MERGE would be.
     """
     stream = _event_stream(spark, events_path, watermark)
     agg = (
@@ -210,29 +185,14 @@ def stream_to_warehouse(
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-
-    return (
-        agg.writeStream.foreachBatch(_write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(
+        agg, lambda df, batch_id: write_batch(df, batch_id, out_dir),
+        checkpoint, queryName)
 
 
 def read_warehouse(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the foreachBatch sink back as a plain table (bookkeeping
-    partition column dropped)."""
-    return spark.read.parquet(out_dir).drop("_batch_id")
+    """Read the `stream_to_warehouse` sink back as a plain table."""
+    return read_batches(spark, out_dir)
 
 
 def stream_enriched_counts(

@@ -4,9 +4,11 @@ against the all-time corpus.
 The production shape of `operators/dedup.dedup_against_corpus`: documents
 land as files, each microbatch is deduped against a STATIC corpus LSH
 index (built once per query start, reused every batch), and survivors are
-appended to the warehouse idempotently (same `_batch_id` dynamic-overwrite
-trick as events.stream_to_warehouse — replayed batches rewrite their own
-partitions).
+appended to the warehouse idempotently.
+
+Every stream here reads through `microbatch.file_stream` and lands each
+microbatch through `microbatch.write_batch`, the exactly-once `_batch_id`
+sink: a replayed batch rewrites its own partition, never duplicates it.
 
 Because the reference set is static, per-document decisions are
 independent of batching, so the stream is EXACTLY equivalent to one batch
@@ -26,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prql_query_spark.engine.session import barrier
+from prql_query_spark.streaming.microbatch import (
+    batch_ids, file_stream, read_batches, start_batches, write_batch)
 
 
 def split_mtime_ordered_batches(
@@ -156,44 +160,26 @@ def stream_heavy_hitter_summaries(
     candidate-filtered aggregate over the accumulated corpus, the same
     query-time contract as the persisted dedup/BM25 probes.
 
-    `_batch_id` dynamic-partition overwrite keeps crash replays
-    idempotent (the repo's standard exactly-once sink contract) — a
-    replayed batch REWRITES its own summary partition; a duplicated one
-    would double the sentinel total and shift the phi threshold, which
-    is exactly what the x_stream_heavy_hitters gate row's in-row replay
-    would catch."""
+    `write_batch` keeps crash replays idempotent — a replayed batch
+    REWRITES its own summary partition; a duplicated one would double
+    the sentinel total and shift the phi threshold, which is exactly
+    what the x_stream_heavy_hitters gate row's in-row replay would
+    catch."""
     import math
 
     from prql_query_spark.operators.analytics import mg_candidate_summary
     from prql_query_spark.operators.text import tokens
 
     k = math.ceil(phi_den / phi_num)
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         items = batch_df.select(
             F.explode(tokens(F.col(text_col))).alias("_item")) \
             .filter(F.col("_item").isNotNull())
-        (
-            mg_candidate_summary(items, k)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(summary_dir)
-        )
+        write_batch(mg_candidate_summary(items, k), batch_id, summary_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_heavy_hitter_summaries_by(
@@ -224,9 +210,10 @@ def stream_heavy_hitter_summaries_by(
     sidecar (optionally `compact_mg_summaries_by` first to fold the
     B-batch pile down to <= groups x (capacity+1) rows, output
     identical — the compactor projects to (by, _item, _w) itself, so
-    the sidecar's `_batch_id` partition column needs no pre-drop); results equal `heavy_hitters_by` on everything ingested
-    (pytest-pinned).  `_batch_id` dynamic-partition overwrite keeps
-    crash replays idempotent, as everywhere."""
+    the sidecar's `_batch_id` partition column needs no pre-drop);
+    results equal `heavy_hitters_by` on everything ingested
+    (pytest-pinned).  `write_batch` keeps crash replays idempotent, as
+    everywhere."""
     import math
 
     from prql_query_spark.operators.analytics import mg_candidate_summary_by
@@ -234,32 +221,16 @@ def stream_heavy_hitter_summaries_by(
 
     by = list(by)
     k = math.ceil(phi_den / phi_num)
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         items = batch_df.select(
             *by, F.explode(tokens(F.col(text_col))).alias("_item")) \
             .filter(F.col("_item").isNotNull())
-        (
-            mg_candidate_summary_by(items, by, k)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(summary_dir)
-        )
+        write_batch(mg_candidate_summary_by(items, by, k), batch_id,
+                    summary_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_dedup_against_corpus(
@@ -296,32 +267,16 @@ def stream_dedup_against_corpus(
     ).transform(barrier)
     corpus_slim = corpus.select(id_col, text_col).transform(barrier)
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         survivors = dedup_against_corpus(
             batch_df, corpus_slim, id_col, text_col, threshold,
             num_perm, bands, k, index=idx,
         )
-        (
-            survivors.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        write_batch(survivors, batch_id, out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_image_dedup_against_corpus(
@@ -347,30 +302,14 @@ def stream_image_dedup_against_corpus(
 
     idx = build_dhash_index(corpus_media, grid, blocks).transform(barrier)
 
-    schema = spark.read.parquet(media_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(media_path)
+    stream = file_stream(spark, media_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         survivors = image_dedup_against_corpus(
             batch_df, idx, max_hamming, grid, blocks)
-        (
-            survivors.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        write_batch(survivors, batch_id, out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_quality_gate(
@@ -387,8 +326,7 @@ def stream_quality_gate(
     """Continuous quality gating of arriving documents: each microbatch
     runs the chosen rule pack (``gate='gopher'`` -> `text.gopher_audit`,
     ``'c4'`` -> `text.c4_clean`), appends the SURVIVORS to the warehouse
-    idempotently (`_batch_id` dynamic-overwrite — replays rewrite their
-    own partitions, never duplicate), and, when ``metrics_dir`` is given,
+    idempotently (`write_batch`), and, when ``metrics_dir`` is given,
     writes the per-batch reject accounting (reason, n_docs) the same way
     — the live dashboard feed that catches a mis-tuned threshold while
     the crawl is still running.
@@ -404,42 +342,41 @@ def stream_quality_gate(
         raise ValueError(f"unknown gate {gate!r}: expected 'gopher' or 'c4'")
     gate_fn = gopher_audit if gate == "gopher" else c4_clean
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         audited = gate_fn(batch_df, **thresholds)
-        (
-            audited.filter(F.col("keep")).drop("keep", "reject_reason")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        write_batch(
+            audited.filter(F.col("keep")).drop("keep", "reject_reason"),
+            batch_id, out_dir)
         if metrics_dir:
-            (
+            write_batch(
                 audited.groupBy(
                     F.coalesce("reject_reason", F.lit("kept")).alias("reason")
                 )
-                .agg(F.count(F.lit(1)).alias("n_docs"))
-                .withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(metrics_dir)
-            )
+                .agg(F.count(F.lit(1)).alias("n_docs")),
+                batch_id, metrics_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
+
+
+def _lakehouse_sink(spark, source_path, max_files_per_trigger, transform,
+                    last_committed, commit, checkpoint, queryName):
+    """The body the four lakehouse sinks share: each micro-batch at or
+    below the table's recorded high-water mark (``last_committed()``) is
+    a replay and is skipped; any other is mapped by ``transform`` and
+    handed to ``commit(df, batch_id)``, which records the mark in the
+    same table commit."""
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        done = last_committed()
+        if done is not None and batch_id <= done:
+            return  # replayed batch: already committed
+        out = transform(batch_df) if transform is not None else batch_df
+        commit(out, batch_id)
+
+    return start_batches(
+        file_stream(spark, source_path, max_files_per_trigger), _batch,
+        checkpoint, queryName)
 
 
 def stream_to_delta(
@@ -464,26 +401,12 @@ def stream_to_delta(
     DataFrame before the append."""
     from prql_query_spark.engine.deltalog import last_txn_version, write_delta
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = last_txn_version(spark, table_path, app_id)
-        if done is not None and batch_id <= done:
-            return  # replayed batch: already in the log
-        out = transform(batch_df) if transform is not None else batch_df
-        write_delta(out, table_path, mode="append", txn=(app_id, batch_id))
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return _lakehouse_sink(
+        spark, source_path, max_files_per_trigger, transform,
+        lambda: last_txn_version(spark, table_path, app_id),
+        lambda out, batch_id: write_delta(
+            out, table_path, mode="append", txn=(app_id, batch_id)),
+        checkpoint, queryName)
 
 
 def stream_upsert_to_delta(
@@ -522,26 +445,12 @@ def stream_upsert_to_delta(
     from prql_query_spark.engine.deltalog import (
         last_txn_version, merge_delta)
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = last_txn_version(spark, table_path, app_id)
-        if done is not None and batch_id <= done:
-            return  # replayed batch: already merged
-        out = transform(batch_df) if transform is not None else batch_df
-        merge_delta(spark, table_path, out, on, txn=(app_id, batch_id))
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return _lakehouse_sink(
+        spark, source_path, max_files_per_trigger, transform,
+        lambda: last_txn_version(spark, table_path, app_id),
+        lambda out, batch_id: merge_delta(
+            spark, table_path, out, on, txn=(app_id, batch_id)),
+        checkpoint, queryName)
 
 
 def stream_to_iceberg(
@@ -572,28 +481,13 @@ def stream_to_iceberg(
     from prql_query_spark.engine.iceberg import (
         last_committed_batch, write_iceberg)
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = last_committed_batch(table_path, app_id)
-        if done is not None and batch_id <= done:
-            return  # replayed batch: already committed
-        out = transform(batch_df) if transform is not None else batch_df
-        write_iceberg(
+    return _lakehouse_sink(
+        spark, source_path, max_files_per_trigger, transform,
+        lambda: last_committed_batch(table_path, app_id),
+        lambda out, batch_id: write_iceberg(
             out, table_path, mode="append",
-            properties={f"pq.stream.{app_id}.batch-id": str(batch_id)})
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+            properties={f"pq.stream.{app_id}.batch-id": str(batch_id)}),
+        checkpoint, queryName)
 
 
 def stream_upsert_to_iceberg(
@@ -620,28 +514,13 @@ def stream_upsert_to_iceberg(
     from prql_query_spark.engine.iceberg import (
         last_committed_batch, merge_iceberg)
 
-    schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = last_committed_batch(table_path, app_id)
-        if done is not None and batch_id <= done:
-            return  # replayed batch: already merged
-        out = transform(batch_df) if transform is not None else batch_df
-        merge_iceberg(
+    return _lakehouse_sink(
+        spark, source_path, max_files_per_trigger, transform,
+        lambda: last_committed_batch(table_path, app_id),
+        lambda out, batch_id: merge_iceberg(
             spark, table_path, out, on,
-            properties={f"pq.stream.{app_id}.batch-id": str(batch_id)})
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+            properties={f"pq.stream.{app_id}.batch-id": str(batch_id)}),
+        checkpoint, queryName)
 
 
 def stream_dedup_growing(
@@ -670,8 +549,10 @@ def stream_dedup_growing(
     here batch N's accepted docs reject batch N+1's copies.  The result
     is order-dependent by construction (first-accepted wins — the
     contract every online dedup has); a replay of the same file order
-    reproduces it exactly, and the `_batch_id` dynamic-overwrite sink
-    keeps replays idempotent.
+    reproduces it exactly, and `write_batch` keeps replays idempotent
+    (a replay with a fresh checkpoint rejects everything it already
+    accepted, writes empty frames and leaves the accepted set intact —
+    pinned by tests::test_stream_dedup_growing_catches_cross_batch_dups).
 
     Scale note: the accepted-so-far side is re-indexed per batch here
     (bounded by accepted volume, not ingest volume); at warehouse scale
@@ -680,24 +561,16 @@ def stream_dedup_growing(
     from prql_query_spark.operators.dedup import (
         dedup_against_corpus, minhash_dedup_cc)
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
     seed = (
         seed_corpus.select(id_col, text_col).transform(barrier)
         if seed_corpus is not None else None
     )
 
     def _accepted_so_far() -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(out_dir) or not any(
-            f.startswith("_batch_id=") for f in os.listdir(out_dir)
-        ):
+        if not batch_ids(out_dir):
             return seed
-        prev = spark.read.parquet(out_dir).select(id_col, text_col)
+        prev = read_batches(spark, out_dir).select(id_col, text_col)
         return prev if seed is None else seed.unionByName(prev)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -712,21 +585,9 @@ def stream_dedup_growing(
                 num_perm, bands, k,
             )
         )
-        (
-            survivors.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        write_batch(survivors, batch_id, out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_dedup_indexed(
@@ -768,20 +629,16 @@ def stream_dedup_indexed(
     from the warehouse) — candidate-set-sized compute, and at warehouse
     scale the out_dir/id lookup is a bucketed or Z-ordered probe.
 
-    All three sinks use the `_batch_id` dynamic-partition-overwrite
-    contract, so crash replays rewrite their own partitions and the
-    (out_dir, index_dir) pair stays mutually consistent.  An optional
-    ``seed_corpus`` contributes its index/hashes/texts in-memory
-    (localCheckpoint) without entering the persisted layout."""
+    All three sinks go through `write_batch`, so crash replays rewrite
+    their own partitions and the (out_dir, index_dir) pair stays
+    mutually consistent.  An optional ``seed_corpus`` contributes its
+    index/hashes/texts in-memory (localCheckpoint) without entering the
+    persisted layout."""
     from prql_query_spark.operators.dedup import (
         _banded_buckets, build_minhash_index, dedup_against_corpus,
         minhash_dedup_cc)
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     seed = (
         seed_corpus.select(id_col, text_col).transform(barrier)
@@ -805,12 +662,10 @@ def stream_dedup_indexed(
         # previously-accepted docs against themselves and rewrite its
         # partition smaller — replay stays a deterministic function of
         # (earlier batches, batch input).
-        out_ids = _batch_partition_ids(out_dir)
-        earlier_ids = {i for i in out_ids if i < batch_id}
+        earlier_ids = {i for i in batch_ids(out_dir) if i < batch_id}
         if not earlier_ids:
             return None, None, None
-        earlier = F.col("_batch_id") < batch_id
-        texts = spark.read.parquet(out_dir).filter(earlier) \
+        texts = read_batches(spark, out_dir, before=batch_id) \
             .select(id_col, text_col)
         bands_d = os.path.join(index_dir, "bands")
         hashes_d = os.path.join(index_dir, "hashes")
@@ -824,13 +679,11 @@ def stream_dedup_indexed(
         # the accepted texts (same decisions, growing-variant cost);
         # `repair_dedup_index` rebuilds the lost partitions offline so
         # the fast path returns.
-        if not (earlier_ids <= _batch_partition_ids(bands_d)
-                and earlier_ids <= _batch_partition_ids(hashes_d)):
+        if not (earlier_ids <= batch_ids(bands_d)
+                and earlier_ids <= batch_ids(hashes_d)):
             return texts, None, None
-        idx = spark.read.parquet(bands_d).filter(earlier) \
-            .drop("_batch_id")
-        hashes = spark.read.parquet(hashes_d).filter(earlier) \
-            .drop("_batch_id")
+        idx = read_batches(spark, bands_d, before=batch_id)
+        hashes = read_batches(spark, hashes_d, before=batch_id)
         return texts, idx, hashes
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -870,60 +723,22 @@ def stream_dedup_indexed(
             )
         # one pass feeds three sinks
         survivors = survivors.transform(barrier)
-        (
-            survivors.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-        (
+        write_batch(survivors, batch_id, out_dir)
+        write_batch(
             bb.join(
                 survivors.select(F.col(id_col).alias("_id")),
                 "_id", "left_semi")
             .select(F.col("_id").alias("corpus_id"),
                     F.col("_band").alias("band"),
-                    F.col("_bucket").alias("bucket"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(index_dir, "bands"))
-        )
-        (
+                    F.col("_bucket").alias("bucket")),
+            batch_id, os.path.join(index_dir, "bands"))
+        write_batch(
             survivors
             .select(F.xxhash64(F.lower(F.col(text_col))).alias("_ch"))
-            .distinct()
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(index_dir, "hashes"))
-        )
+            .distinct(),
+            batch_id, os.path.join(index_dir, "hashes"))
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
-
-
-def _batch_partition_ids(d: str) -> set[int]:
-    """The `_batch_id` partition ids present under a sink directory
-    (empty set when the directory is missing) — one listdir, the unit
-    of the sidecar completeness check and of repair."""
-    if not os.path.isdir(d):
-        return set()
-    out = set()
-    for f in os.listdir(d):
-        if f.startswith("_batch_id="):
-            try:
-                out.add(int(f.split("=", 1)[1]))
-            except ValueError:
-                pass
-    return out
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def repair_dedup_index(
@@ -943,7 +758,7 @@ def repair_dedup_index(
     derivations of the accepted texts, so a rebuild is always safe:
     for every `_batch_id` partition present in ``out_dir`` but absent
     from `bands/` or `hashes/`, recompute that partition's rows from
-    its accepted docs and write it (dynamic overwrite — idempotent).
+    its accepted docs and write it (`write_batch` — idempotent).
     Until this runs, `stream_dedup_indexed` keeps making IDENTICAL
     decisions via the degraded derive-from-texts path, so repair is a
     cost optimization, never a correctness event.
@@ -951,7 +766,7 @@ def repair_dedup_index(
     Returns {"bands": [rebuilt ids...], "hashes": [...]}."""
     from prql_query_spark.operators.dedup import build_minhash_index
 
-    out_ids = _batch_partition_ids(out_dir)
+    out_ids = batch_ids(out_dir)
     rebuilt: dict = {"bands": [], "hashes": []}
     for part, make in (
         ("bands", lambda df: build_minhash_index(
@@ -961,17 +776,10 @@ def repair_dedup_index(
             .distinct()),
     ):
         d = os.path.join(index_dir, part)
-        for bid in sorted(out_ids - _batch_partition_ids(d)):
-            src = spark.read.parquet(out_dir) \
-                .filter(F.col("_batch_id") == bid) \
+        for bid in sorted(out_ids - batch_ids(d)):
+            src = read_batches(spark, out_dir, only=bid) \
                 .select(id_col, text_col)
-            (
-                make(src).withColumn("_batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(d)
-            )
+            write_batch(make(src), bid, d)
             rebuilt[part].append(bid)
     return rebuilt
 
@@ -1009,11 +817,10 @@ def stream_auc_histograms(
     any accumulated window without ever rescanning scores, the 100 TB
     monitoring contract BASELINE §4.4i.3 names.
 
-    `_batch_id` dynamic-partition overwrite keeps crash replays
-    idempotent (the repo's standard exactly-once sink contract): a
-    replayed batch REWRITES its own partition; a duplicated one would
-    double that batch's counts and shift the AUC, which is what the
-    gate row's in-row fresh-checkpoint replay would catch.
+    `write_batch` keeps crash replays idempotent: a replayed batch
+    REWRITES its own partition; a duplicated one would double that
+    batch's counts and shift the AUC, which is what the gate row's
+    in-row fresh-checkpoint replay would catch.
 
     The pinned-cuts contract is ENFORCED, not just documented: before
     the stream starts, the cuts are fingerprinted into the sidecar
@@ -1038,29 +845,13 @@ def stream_auc_histograms(
     by = list(by) if by else []
     write_cuts_fingerprint(hist_dir, cuts)
 
-    schema = spark.read.parquet(scores_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(scores_path)
+    stream = file_stream(spark, scores_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            score_histogram(batch_df, score_col, label_col, cuts, by=by)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(hist_dir)
-        )
+        hist = score_histogram(batch_df, score_col, label_col, cuts, by=by)
+        write_batch(hist, batch_id, hist_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def stream_bm25_index(
@@ -1086,65 +877,36 @@ def stream_bm25_index(
     because batches hold disjoint docs), feeding the df-capped probe
     (`probe_bm25_index_dfcap`) without breaking append-onlyness.
 
-    `_batch_id` dynamic-partition overwrite keeps crash replays
-    idempotent (the repo's standard exactly-once sink contract).  Read
-    back with `read_bm25_index` (+ `read_bm25_term_stats`) and serve
-    with `retrieval.probe_bm25_index`; results equal a from-scratch
-    build on everything ingested (batch-equivalence pytest pins it).
+    `write_batch` keeps crash replays idempotent.  Read back with
+    `read_bm25_index` (+ `read_bm25_term_stats`) and serve with
+    `retrieval.probe_bm25_index`; results equal a from-scratch build on
+    everything ingested (batch-equivalence pytest pins it).
     """
     from prql_query_spark.operators.retrieval import (
         build_bm25_index, term_stats_from_postings)
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    stream = file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         postings, stats = build_bm25_index(batch_df, id_col, text_col)
         # the build's postings feed two sinks; materialize once so the
         # tokenize+explode+groupBy subtree doesn't run twice per batch
         postings = postings.transform(barrier)
-        (
-            postings.sort("term").withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(index_dir, "postings"))
-        )
-        (
-            stats.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(index_dir, "stats"))
-        )
-        (
-            term_stats_from_postings(postings)
-            .sort("term").withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(index_dir, "term_stats"))
-        )
+        write_batch(postings.sort("term"), batch_id,
+                    os.path.join(index_dir, "postings"))
+        write_batch(stats, batch_id, os.path.join(index_dir, "stats"))
+        write_batch(term_stats_from_postings(postings).sort("term"), batch_id,
+                    os.path.join(index_dir, "term_stats"))
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(queryName)
-        .start()
-    )
+    return start_batches(stream, _batch, checkpoint, queryName)
 
 
 def read_bm25_index(spark: SparkSession, index_dir: str):
     """(postings, stats) from a stream_bm25_index directory: postings as
     written (per-batch partitions, each term-sorted within its batch),
     stats folded to the single mergeable row probe_bm25_index expects."""
-    postings = spark.read.parquet(
-        os.path.join(index_dir, "postings")).drop("_batch_id")
-    stats = spark.read.parquet(os.path.join(index_dir, "stats")).agg(
+    postings = read_batches(spark, os.path.join(index_dir, "postings"))
+    stats = read_batches(spark, os.path.join(index_dir, "stats")).agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("sum_dl").cast("long").alias("sum_dl"))
     return postings, stats
@@ -1154,5 +916,4 @@ def read_bm25_term_stats(spark: SparkSession, index_dir: str):
     """The term_stats sidecar from a stream_bm25_index directory:
     per-batch df partials as written (the df-capped probe sums the
     partials itself, pruned to the query's terms)."""
-    return spark.read.parquet(
-        os.path.join(index_dir, "term_stats")).drop("_batch_id")
+    return read_batches(spark, os.path.join(index_dir, "term_stats"))

@@ -21,6 +21,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StructField, StructType, TimestampType,
 )
 
+from prql_query_spark.streaming.microbatch import file_stream
+
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("session_start", TimestampType()),
@@ -107,9 +109,9 @@ def stream_user_sessions(
     """Streaming sessionization over a file source; returns the started
     StreamingQuery writing closed sessions to a memory sink.
 
-    Mirrors stream_tumbling_counts' source handling (ns-timestamp parquet,
-    bare-file symlink wrap); the stateful core is engine-agnostic — swap
-    the source for Kafka and nothing else changes.
+    The source is `microbatch.file_stream`, as for every stream here
+    (ns-timestamp parquet, bare files); the stateful core is
+    engine-agnostic — swap the source for Kafka and nothing else changes.
     ``max_files_per_trigger=1`` makes each pinned-mtime source file its
     own microbatch (the deterministic gate/test drive shape).
     ``available_now=True`` drives all pending files (still batched per
@@ -120,31 +122,11 @@ def stream_user_sessions(
     microbatches (see test_stateful_stream_sessions_match_batch), so
     finite drivers must either poll (default trigger) or use this.
     """
-    import os
-    import tempfile
-
-    import pandas as pd  # noqa: F811
     from pyspark.sql import functions as F
 
-    from prql_query_spark.engine.sources import load_parquet
-
     gap_seconds = int(pd.Timedelta(gap).total_seconds())
-    batch = load_parquet(spark, events_path)
-    raw_schema = spark.read.parquet(events_path).schema
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="pq_stream_")
-        os.symlink(events_path, os.path.join(d, os.path.basename(events_path)))
-        events_path = d
-    reader = spark.readStream.schema(raw_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_path)
-    for name, field in zip(batch.schema.fieldNames(), batch.schema.fields):
-        raw = raw_schema[name].dataType
-        if raw != field.dataType and str(field.dataType) == "TimestampType()":
-            stream = stream.withColumn(
-                name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = file_stream(spark, events_path, max_files_per_trigger) \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
     out = (
         stream.select("user_id", "ts", "value")
         .groupBy("user_id")
@@ -184,9 +166,6 @@ def stream_running_totals(
     Requires the `protobuf` package (the transformWithState worker
     protocol is protobuf-based); raises a clear error when absent.
     """
-    import os
-    import tempfile
-
     try:
         from google.protobuf import descriptor  # noqa: F401
     except ImportError as exc:
@@ -198,15 +177,12 @@ def stream_running_totals(
         ) from exc
 
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor, StatefulProcessorHandle,
     )
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,
     )
-
-    from prql_query_spark.engine.sources import load_parquet
 
     state_schema = StructType([
         StructField("n", LongType()), StructField("cents", LongType()),
@@ -234,18 +210,7 @@ def stream_running_totals(
         def close(self) -> None:
             pass
 
-    batch = load_parquet(spark, events_path)
-    raw_schema = spark.read.parquet(events_path).schema
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="pq_stream_")
-        os.symlink(events_path, os.path.join(d, os.path.basename(events_path)))
-        events_path = d
-    stream = spark.readStream.schema(raw_schema).parquet(events_path)
-    for name, field in zip(batch.schema.fieldNames(), batch.schema.fields):
-        raw = raw_schema[name].dataType
-        if raw != field.dataType and str(field.dataType) == "TimestampType()":
-            stream = stream.withColumn(
-                name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
+    stream = file_stream(spark, events_path)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

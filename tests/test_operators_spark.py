@@ -537,6 +537,34 @@ def test_spread_accepts_byte_string_confs(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
+def test_spread_non_splittable_input_takes_exact_probe(spark, tmp_path):
+    """A gzip CSV is one scan split whatever its size, so its bytes prove
+    nothing about scan width: _spread must spread it even when
+    ceil(bytes / maxPartitionBytes) reaches the target."""
+    import gzip
+    import random
+
+    from prql_query_spark.operators.dedup import _spread
+
+    target = spark.sparkContext.defaultParallelism
+    rng = random.Random(7)
+    p = tmp_path / "docs.csv.gz"
+    with gzip.open(p, "wt") as f:
+        f.write("doc_id,text\n")
+        for i in range(4000):
+            f.write(f"{i},{rng.getrandbits(64):x}\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "4k")
+    try:
+        assert p.stat().st_size > target * 4096
+        df = spark.read.schema("doc_id long, text string") \
+            .option("header", True).csv(str(p))
+        assert df.rdd.getNumPartitions() == 1
+        assert _spread(df).rdd.getNumPartitions() == target
+    finally:
+        spark.conf.unset(key)
+
+
 def _banded(spark, rows):
     return spark.createDataFrame(rows, "_band int, _bucket bigint, _id bigint")
 
@@ -2697,6 +2725,92 @@ def test_stream_quality_gate_matches_batch(spark, sf_dir, tmp_path):
     assert m.select("_batch_id").distinct().count() > 1
 
 
+def _two_doc_parquet(path, ts_type=None):
+    """Write a 2-doc (doc_id, text[, ts]) parquet file with pyarrow;
+    ``ts_type`` adds a timestamp column of that arrow type."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    cols = {
+        "doc_id": pa.array([1, 2], type=pa.int64()),
+        "text": ["the river runs past the old mill and the farm where "
+                 "the children of the valley play in the long summer "
+                 "evenings with their dogs and their friends",
+                 "short note"],
+    }
+    if ts_type is not None:
+        cols["ts"] = pa.array([datetime.datetime(2030, 1, 2, 3, 4, 5, 6)] * 2,
+                              type=ts_type)
+    papq.write_table(pa.table(cols), path)
+
+
+def _drive_quality_gate_and_bm25(spark, tmp_path, docs_path):
+    """Run stream_quality_gate and stream_bm25_index over ``docs_path`` to
+    completion; returns (kept rows, bm25 postings, bm25 stats row)."""
+    from prql_query_spark.streaming.ingest import (
+        read_bm25_index, stream_bm25_index, stream_quality_gate)
+
+    kept = str(tmp_path / "kept")
+    idx = str(tmp_path / "bm25")
+    for q in (
+        stream_quality_gate(
+            spark, docs_path, kept, checkpoint=str(tmp_path / "ck_q"),
+            queryName="t_qgate_src", min_words=5, max_dup_frac=1.0),
+        stream_bm25_index(
+            spark, docs_path, idx, checkpoint=str(tmp_path / "ck_b"),
+            queryName="t_bm25_src"),
+    ):
+        try:
+            q.processAllAvailable()
+            assert q.exception() is None
+        finally:
+            q.stop()
+    postings, stats = read_bm25_index(spark, idx)
+    return (spark.read.parquet(kept).drop("_batch_id").collect(),
+            postings, stats.first())
+
+
+def test_stream_ingest_reads_bare_parquet_file(spark, tmp_path):
+    """A bare .parquet file is a valid ingest stream source, as it is for
+    the events streams and for batch reads (file_stream wraps it in a
+    directory; a raw file-stream source rejects it)."""
+    from prql_query_spark.operators.text import gopher_audit
+
+    bare = str(tmp_path / "docs.parquet")
+    _two_doc_parquet(bare)
+    kept, postings, stats = _drive_quality_gate_and_bm25(
+        spark, tmp_path, bare)
+
+    want = gopher_audit(load_parquet(spark, bare), min_words=5,
+                        max_dup_frac=1.0).filter(F.col("keep"))
+    assert sorted(r.doc_id for r in kept) == \
+        sorted(r.doc_id for r in want.collect()) == [1]
+    assert stats["n"] == 2
+    assert {r.id for r in postings.select("id").collect()} == {1, 2}
+
+
+def test_stream_ingest_reads_ns_timestamps(spark, tmp_path):
+    """INT64 TIMESTAMP(NANOS) columns stream as they load in batch: read
+    through nanosAsLong and truncated to microseconds, not rejected with
+    PARQUET_TYPE_ILLEGAL before the stream starts."""
+    import datetime
+
+    import pyarrow as pa
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    _two_doc_parquet(str(src / "f0.parquet"), pa.timestamp("ns"))
+    kept, postings, stats = _drive_quality_gate_and_bm25(
+        spark, tmp_path, str(src))
+
+    assert [(r.doc_id, r.ts) for r in kept] == \
+        [(1, datetime.datetime(2030, 1, 2, 3, 4, 5, 6))]
+    assert stats["n"] == 2
+    assert {r.id for r in postings.select("id").collect()} == {1, 2}
+
+
 def test_ivfpq_prebuilt_index_matches_inline(emb):
     """Serving path: a persisted ivfpq_index / pq_encode table must give
     the same answer as the inline-encode path bit-for-bit."""
@@ -4010,6 +4124,21 @@ def test_stream_dedup_growing_catches_cross_batch_dups(spark, sf_dir, tmp_path):
         q2.stop()
     assert spark.read.parquet(out).count() == n_before
 
+    # a real replay: a FRESH checkpoint runs both batches again over the
+    # same warehouse.  Every doc now meets its own accepted copy and is
+    # rejected, so each batch writes an empty frame, which must leave its
+    # accepted partition intact (write_batch's dynamic overwrite)
+    q3 = stream_dedup_growing(
+        spark, str(in_dir), out, checkpoint=str(tmp_path / "ck_fresh"),
+        threshold=0.6, queryName="t_grow3", max_files_per_trigger=1,
+    )
+    try:
+        q3.processAllAvailable()
+        assert q3.exception() is None
+    finally:
+        q3.stop()
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == got
+
 
 def test_stream_dedup_indexed_matches_growing(spark, sf_dir, tmp_path):
     """The persisted-index streaming dedup must make IDENTICAL
@@ -4105,13 +4234,12 @@ def test_stream_dedup_indexed_matches_growing(spark, sf_dir, tmp_path):
 
     # offline repair rebuilds exactly the lost partition from the
     # warehouse, after which the completeness check passes again
-    from prql_query_spark.streaming.ingest import (
-        _batch_partition_ids, repair_dedup_index)
+    from prql_query_spark.streaming.ingest import repair_dedup_index
+    from prql_query_spark.streaming.microbatch import batch_ids
 
     rebuilt = repair_dedup_index(spark, out_i, str(tmp_path / "idx"))
     assert rebuilt["bands"] == [1] and rebuilt["hashes"] == []
-    assert _batch_partition_ids(str(tmp_path / "idx" / "bands")) \
-        >= {0, 1, 2}
+    assert batch_ids(str(tmp_path / "idx" / "bands")) >= {0, 1, 2}
     # rebuilt rows equal the original build for batch 1's survivors
     from prql_query_spark.operators.dedup import build_minhash_index
 
