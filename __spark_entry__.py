@@ -5770,7 +5770,7 @@ def _x_iceberg_partition(spark, sf_dir):
     files stack on the partitioned layout), then aggregate TWO reads:
     the full post-delete head, and a `where=` read of the 1-URGENT
     partition — whose file list is asserted in-row to be a STRICT
-    subset of the table's data files (`_prune_data_files`), so a
+    subset of the table's data files (`pruning.keep_files`), so a
     pruning regression (full scan) or over-pruning (wrong subset)
     fails loudly.  The oracle recomputes both sides from raw orders
     with the delete predicate inverted, so a partition-leak (rows in
@@ -5779,8 +5779,9 @@ def _x_iceberg_partition(spark, sf_dir):
     import json
 
     from prql_query_spark.engine.iceberg import (
-        _latest_metadata, _prune_data_files, _walk_manifests,
-        delete_iceberg, read_iceberg, write_iceberg)
+        _latest_metadata, _table_schema, _walk_manifests, delete_iceberg,
+        read_iceberg, write_iceberg)
+    from prql_query_spark.engine.pruning import keep_files
 
     d = _rt_dir("pq_rt_icepart_") + "/orders"
     src = _tbl(spark, sf_dir, "orders").select(
@@ -5792,8 +5793,10 @@ def _x_iceberg_partition(spark, sf_dir):
     snap = next(s for s in meta["snapshots"]
                 if s["snapshot-id"] == meta["current-snapshot-id"])
     dfs, _dels, parts, _bounds = _walk_manifests(snap, d)
-    pruned = _prune_data_files(
-        spark, meta, dfs, parts, "o_orderpriority = '1-URGENT'")
+    pruned = keep_files(
+        spark, _table_schema(meta), ["o_orderpriority"],
+        {p: (parts.get(p), None, None) for p, _s in dfs},
+        "o_orderpriority = '1-URGENT'") or ()
     if not (0 < len(pruned) < len(dfs)):
         raise AssertionError(
             f"manifest pruning regressed: {len(pruned)} of {len(dfs)} "
@@ -6053,8 +6056,9 @@ def _x_delta_partition(spark, sf_dir):
     from pyspark.sql.types import StructType as _ST
 
     from prql_query_spark.engine.deltalog import (
-        _skip_files_by_stats, _snapshot_actions, delete_delta,
+        _prune_inputs, _snapshot_actions, delete_delta,
         read_delta_snapshot, write_delta)
+    from prql_query_spark.engine.pruning import keep_files
 
     d = _rt_dir("pq_rt_deltapart_") + "/orders"
     src = _tbl(spark, sf_dir, "orders").select(
@@ -6065,9 +6069,9 @@ def _x_delta_partition(spark, sf_dir):
     meta, _p, adds, _t = _snapshot_actions(
         spark, _os.path.join(d, "_delta_log"), None)
     schema = _ST.fromJson(_json.loads(meta["schemaString"]))
-    kept = _skip_files_by_stats(
-        spark, schema, ["o_orderpriority"], adds,
-        "o_orderpriority = '1-URGENT'")
+    kept = keep_files(
+        spark, schema, ["o_orderpriority"], _prune_inputs(adds),
+        "o_orderpriority = '1-URGENT'") or ()
     if not (0 < len(kept) < len(adds)):
         raise AssertionError(
             f"stats skipping regressed: {len(kept)} of {len(adds)} "

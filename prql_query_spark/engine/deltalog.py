@@ -34,9 +34,9 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DateType, IntegerType, LongType, StructField, StructType)
+from pyspark.sql.types import StructField, StructType
 
+from prql_query_spark.engine.pruning import keep_files
 from prql_query_spark.engine.session import barrier
 
 
@@ -123,71 +123,19 @@ def _snapshot_actions(spark: SparkSession, log_dir: str, version: int | None):
     return meta, protocol, adds, txns
 
 
-def _skip_files_by_stats(
-    spark: SparkSession, schema: StructType, part_cols: list[str],
-    adds: dict, where: str,
-) -> dict:
-    """Drop `add` entries whose per-file ``stats`` (min/max) or
-    partition values cannot satisfy ``where`` — Delta's file-skipping,
-    driver-side on log metadata only.  Partition values participate as
-    point intervals (value = min = max), so a partition predicate
-    prunes here even before Spark's own PartitionFilters see the scan.
-    Conservative: files without stats always survive, and the caller
-    re-applies ``where`` as a row filter."""
-    import datetime
-
-    from prql_query_spark.engine.pruning import (
-        BOUND_TYPES, conjunctive_keep)
-
-    from pyspark.sql.types import StringType
-
-    # footer stats: bound-exact types only; PARTITION values come from
-    # the log (exact, never truncated), so string partition columns
-    # participate as point intervals too — the common
-    # `part_str = 'x' AND ...` shape skips files
-    types = {f.name: f.dataType for f in schema.fields
-             if isinstance(f.dataType, BOUND_TYPES)
-             or (f.name in part_cols
-                 and isinstance(f.dataType, StringType))}
-    if not types:
-        return adds
-
-    def de(v, typ):
-        if v is None:
-            return None
-        if isinstance(typ, StringType):
-            return str(v)
-        if isinstance(typ, DateType):
-            return datetime.date.fromisoformat(str(v)[:10])
-        if isinstance(typ, (IntegerType, LongType)):
-            return int(v)
-        return float(v)
-
-    fb = {}
+def _prune_inputs(adds: dict) -> dict:
+    """`pruning.keep_files`' per-file metadata from the add actions:
+    partitionValues and the ``stats`` minValues / maxValues (a file
+    without readable stats has no bounds)."""
+    files = {}
     for p, add in adds.items():
-        lo, hi = {}, {}
         try:
-            st = json.loads(add["stats"]) if add.get("stats") else {}
-        except (ValueError, TypeError):
-            st = {}
-        for c, typ in types.items():
-            if c in part_cols:
-                try:
-                    v = de((add.get("partitionValues") or {}).get(c), typ)
-                except (ValueError, TypeError):
-                    v = None
-                lo[c] = hi[c] = v
-            else:
-                try:
-                    lo[c] = de((st.get("minValues") or {}).get(c), typ)
-                    hi[c] = de((st.get("maxValues") or {}).get(c), typ)
-                except (ValueError, TypeError):
-                    lo[c] = hi[c] = None
-        fb[p] = (lo, hi)
-    keep = conjunctive_keep(spark, types, fb, where)
-    if keep is None:
-        return adds
-    return {p: a for p, a in adds.items() if p in keep}
+            st = json.loads(add.get("stats") or "{}")
+            lo, hi = st.get("minValues"), st.get("maxValues")
+        except (AttributeError, TypeError, ValueError):
+            lo = hi = None
+        files[p] = (add.get("partitionValues"), lo, hi)
+    return files
 
 
 def read_delta_snapshot(
@@ -198,11 +146,11 @@ def read_delta_snapshot(
     time-travel ``version``) snapshot — no connector jar required.
 
     ``where`` (optional) is any Spark SQL boolean expression; it is
-    ALWAYS applied as a row filter, and when it constrains stats-
-    covered or partition columns it additionally SKIPS whole data
-    files driver-side from the log's per-file ``stats`` and partition
-    values — Delta's file-skipping, the scan lever that keeps a
-    selective predicate from opening every footer of a 100 TB
+    ALWAYS applied as a row filter, and its conjuncts over partition
+    or stats-covered columns additionally SKIP whole data files using
+    the log's partition values and per-file ``stats``
+    (`pruning.keep_files`) — Delta's file-skipping, the scan lever that
+    keeps a selective predicate from opening every footer of a 100 TB
     table."""
     log_dir = os.path.join(path, "_delta_log")
     meta, protocol, adds, _txns = _snapshot_actions(spark, log_dir, version)
@@ -234,7 +182,9 @@ def read_delta_snapshot(
     if where and mapping_mode == "none":
         # skipping keys on LOGICAL names; mapping-mode stats would key
         # on physical names — fall through to the row filter alone
-        adds = _skip_files_by_stats(spark, schema, part_cols, adds, where)
+        keep = keep_files(spark, schema, part_cols, _prune_inputs(adds), where)
+        if keep is not None:
+            adds = {p: a for p, a in adds.items() if p in keep}
 
     def _done(df: DataFrame) -> DataFrame:
         return df.filter(where) if where else df
@@ -289,10 +239,12 @@ def read_delta_snapshot(
         for p in adds
     )
     if hive_style:
+        # partition discovery appends the partition columns last
         return _done(
             spark.read.schema(schema)
             .option("basePath", path)
             .parquet(*files)
+            .select([f.name for f in schema.fields])
         )
     # Fallback for non-hive layouts: group files by their partition
     # values and attach them as typed literals.

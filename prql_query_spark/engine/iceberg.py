@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from prql_query_spark.engine.avro import decode_container
+from prql_query_spark.engine.pruning import keep_files
 
 
 class IcebergError(ValueError):
@@ -265,132 +266,6 @@ def _identity_part_fields(meta: dict) -> list[tuple[str, DataType]]:
     return out
 
 
-def _prune_data_files(
-    spark: SparkSession,
-    meta: dict,
-    data_files: list[tuple[str, object]],
-    partitions: dict,
-    where: str,
-) -> list[tuple[str, object]]:
-    """Manifest-level partition pruning — Iceberg's core scan lever at
-    scale: drop data files whose identity-partition values cannot
-    satisfy ``where`` BEFORE any parquet footer is opened.  Strictly an
-    optimization: the caller re-applies ``where`` as a row filter, so
-    falling back to the full file list is always correct.  Falls back
-    when the table has no identity partition fields, any data file
-    lacks partition metadata (external writers), a value type is not
-    prunable, or the predicate references non-partition columns (the
-    one-row-per-file evaluation frame fails analysis).  The evaluation
-    itself runs through Spark SQL on a metadata-scale local DataFrame
-    (one row per data file), so predicate semantics — null handling,
-    type coercion, collation — are exactly the engine's own."""
-    import datetime
-
-    fields = _identity_part_fields(meta)
-    if not fields:
-        return data_files
-
-    def conv(v, typ):
-        if v is None:
-            return None
-        if isinstance(typ, DateType):
-            # avro/iceberg date encoding: days since epoch
-            return datetime.date(1970, 1, 1) + datetime.timedelta(days=int(v))
-        if isinstance(typ, (IntegerType, LongType)):
-            return int(v)
-        if isinstance(typ, StringType):
-            return str(v)
-        raise IcebergError(f"unprunable partition type {typ}")
-
-    rows = []
-    for p, _s in data_files:
-        pv = partitions.get(p)
-        if pv is None:
-            return data_files  # a file without partition metadata
-        try:
-            rows.append(tuple([p] + [conv(pv.get(c), t) for c, t in fields]))
-        except (IcebergError, ValueError, KeyError):
-            return data_files
-    frame_schema = StructType(
-        [StructField("_pq_file", StringType(), False)]
-        + [StructField(c, t, True) for c, t in fields])
-    pdf = spark.createDataFrame(rows, frame_schema)
-
-    def try_filter(pred):
-        try:
-            return {r["_pq_file"]
-                    for r in pdf.filter(pred).select("_pq_file").collect()}
-        except Exception:
-            return None
-
-    keep = try_filter(where)
-    if keep is None:
-        # mixed predicate (references non-partition columns): fall back
-        # to the top-level AND conjuncts that analyze against the
-        # partition frame alone — `part = x AND data_col > y` still
-        # partition-prunes on its first conjunct.  A conjunct mangled
-        # by the textual split (quoted strings containing ' and ')
-        # fails analysis and is IGNORED — ignoring keeps more files,
-        # never fewer, and the caller re-applies the full predicate as
-        # a row filter.
-        for conj in re.split(r"\band\b", where, flags=re.IGNORECASE):
-            k = try_filter(conj)
-            if k is not None:
-                keep = k if keep is None else (keep & k)
-    if keep is None:
-        return data_files
-    return [t for t in data_files if t[0] in keep]
-
-
-def _prune_by_bounds(
-    spark: SparkSession,
-    meta: dict,
-    data_files: list[tuple[str, object]],
-    bounds: dict,
-    where: str,
-) -> list[tuple[str, object]]:
-    """File skipping on per-column min/max manifest stats — the second
-    manifest-level scan lever after partition pruning, and like it
-    strictly an optimization (the caller re-applies ``where`` as a row
-    filter).  The conservative conjunct analysis and the typed
-    interval evaluation live in `engine.pruning.conjunctive_keep`
-    (shared with the Delta reader); this wrapper only deserializes the
-    manifests' string-encoded bounds against the table schema."""
-    import datetime
-
-    from prql_query_spark.engine.pruning import BOUND_TYPES, conjunctive_keep
-
-    # footer-stats safety: bound-exact types only (strings may be
-    # parquet-truncated — conjunctive_keep's caller contract)
-    fields = {f.name: f.dataType for f in _table_schema(meta).fields
-              if isinstance(f.dataType, BOUND_TYPES)}
-
-    def de(v, typ):
-        if v is None:
-            return None
-        if isinstance(typ, DateType):
-            return datetime.date.fromisoformat(v)
-        if isinstance(typ, (IntegerType, LongType)):
-            return int(v)
-        return float(v)
-
-    fb = {}
-    for p, _s in data_files:
-        lo, hi = bounds.get(p, (None, None))
-        dlo, dhi = {}, {}
-        for c, typ in fields.items():
-            try:
-                dlo[c] = de((lo or {}).get(c), typ)
-                dhi[c] = de((hi or {}).get(c), typ)
-            except (ValueError, TypeError):
-                dlo[c] = dhi[c] = None
-        fb[p] = (dlo, dhi)
-    keep = conjunctive_keep(spark, fields, fb, where)
-    if keep is None:
-        return data_files
-    return [t for t in data_files if t[0] in keep]
-
-
 def read_iceberg(
     spark: SparkSession, path: str, snapshot_id: int | None = None,
     where: str | None = None
@@ -399,12 +274,12 @@ def read_iceberg(
     snapshot without the connector jar.
 
     ``where`` (optional) is any Spark SQL boolean expression; it is
-    ALWAYS applied as a row filter, and when it constrains only the
-    table's identity partition columns it additionally prunes whole
-    data files at the manifest level — the metadata-only scan
-    elimination that makes partitioned Iceberg tables work at 100 TB
-    (a day-partitioned predicate reads one day's files, not the
-    table)."""
+    ALWAYS applied as a row filter, and its conjuncts over the identity
+    partition columns or the manifests' min/max bounds additionally
+    skip whole data files at the manifest level (`pruning.keep_files`)
+    — the metadata-only scan elimination that makes partitioned
+    Iceberg tables work at 100 TB (a day-partitioned predicate reads
+    one day's files, not the table)."""
     meta_path = _latest_metadata(path)
     with open(meta_path) as fh:
         meta = json.load(fh)
@@ -433,11 +308,12 @@ def read_iceberg(
     data_files, pos_deletes, partitions, bounds = _walk_manifests(snap, path)
 
     if where:
-        data_files = _prune_data_files(
-            spark, meta, data_files, partitions, where)
-        if bounds:
-            data_files = _prune_by_bounds(
-                spark, meta, data_files, bounds, where)
+        keep = keep_files(
+            spark, spark_schema, [c for c, _t in _identity_part_fields(meta)],
+            {p: (partitions.get(p), *bounds.get(p, (None, None)))
+             for p, _s in data_files}, where)
+        if keep is not None:
+            data_files = [t for t in data_files if t[0] in keep]
     if not data_files:
         out = spark.createDataFrame([], spark_schema)
         return out.filter(where) if where else out

@@ -47,6 +47,10 @@ def write_single_file(df: DataFrame, path: str, fmt: str) -> None:
     import pyarrow.csv as pacsv
     import pyarrow.parquet as papq
 
+    if fmt == "table":  # the pretty table stdout gets
+        with open(path, "w", encoding="utf-8") as f:
+            f.write(write_pretty(df) + "\n")
+        return
     tbl = df.toArrow()
     if fmt == "parquet":
         papq.write_table(tbl, path)

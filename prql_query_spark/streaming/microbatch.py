@@ -35,8 +35,12 @@ def file_stream(spark: SparkSession, path: str,
     to the nanosAsLong read, and the stream mirrors its `div 1000`
     conversion so those columns arrive as TIMESTAMP.  It must see the bare
     file, so the pyarrow footer probe can.  FileStreamSource needs a
-    directory, so a bare file is wrapped in a temp dir via symlink.
-    ``max_files_per_trigger`` caps the files per micro-batch when set."""
+    directory, so a bare file is wrapped in a symlink dir.  The dir is
+    one per absolute file path, the same on every start: a checkpoint
+    records the source dir, and a restart must find the one it
+    recorded.  ``max_files_per_trigger`` caps the files per micro-batch
+    when set."""
+    import hashlib
     import tempfile
 
     from prql_query_spark.engine.sources import load_parquet
@@ -44,8 +48,14 @@ def file_stream(spark: SparkSession, path: str,
     batch = load_parquet(spark, path)
     raw_schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
-        d = tempfile.mkdtemp(prefix="pq_stream_")
-        os.symlink(path, os.path.join(d, os.path.basename(path)))
+        path = os.path.abspath(path)
+        d = os.path.join(tempfile.gettempdir(), "pq_stream",
+                         hashlib.sha1(path.encode()).hexdigest()[:16])
+        os.makedirs(d, exist_ok=True)
+        try:
+            os.symlink(path, os.path.join(d, os.path.basename(path)))
+        except FileExistsError:
+            pass
         path = d
     reader = spark.readStream.schema(raw_schema)
     if max_files_per_trigger:

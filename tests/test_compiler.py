@@ -460,6 +460,21 @@ def test_cli_delta_sink_roundtrip(spark, tmp_path, sf_dir):
     assert got == want
 
 
+def test_cli_table_file_sink(spark, tmp_path, sf_dir, capsys):
+    """`--to out.table` / `out.tbl` write the pretty table stdout gets."""
+    import pq
+
+    query = "from r | select [r_regionkey, r_name] | sort [r_regionkey]"
+    base = ["-f", f"r={sf_dir}/region.parquet"]
+    assert pq.main(base + [query]) == 0
+    want = capsys.readouterr().out
+    assert "| r_regionkey | r_name" in want
+    for ext in ("table", "tbl"):
+        out = tmp_path / f"out.{ext}"
+        assert pq.main(base + ["-t", str(out), query]) == 0
+        assert out.read_text(encoding="utf-8") == want
+
+
 def test_cli_iceberg_sink_roundtrip(spark, tmp_path, sf_dir):
     """`--to out.iceberg` end to end without the connector jar: the CLI
     executes the PRQL, writes through the pure-Python v2 metadata-chain

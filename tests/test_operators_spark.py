@@ -2791,6 +2791,30 @@ def test_stream_ingest_reads_bare_parquet_file(spark, tmp_path):
     assert {r.id for r in postings.select("id").collect()} == {1, 2}
 
 
+def test_stream_on_bare_file_restarts_from_checkpoint(spark, tmp_path):
+    """A second start of a bare-file stream on the same checkpoint resumes
+    it: the symlink dir wrapping the file is the same on every start (a
+    fresh dir per start fails the restart with "Wrong basePath"), and
+    the restart commits no new batch."""
+    from prql_query_spark.streaming.ingest import stream_quality_gate
+    from prql_query_spark.streaming.microbatch import batch_ids
+
+    bare = str(tmp_path / "docs.parquet")
+    _two_doc_parquet(bare)
+    kept = str(tmp_path / "kept")
+    for _start in range(2):
+        q = stream_quality_gate(
+            spark, bare, kept, checkpoint=str(tmp_path / "ck"),
+            queryName="t_qgate_restart", min_words=5, max_dup_frac=1.0)
+        try:
+            q.processAllAvailable()
+            assert q.exception() is None
+        finally:
+            q.stop()
+    assert batch_ids(kept) == {0}
+    assert spark.read.parquet(kept).count() == 1
+
+
 def test_stream_ingest_reads_ns_timestamps(spark, tmp_path):
     """INT64 TIMESTAMP(NANOS) columns stream as they load in batch: read
     through nanosAsLong and truncated to microseconds, not rejected with
@@ -6580,6 +6604,33 @@ def test_iceberg_merge_upsert(spark, tmp_path):
         == [2, 4, 9]
 
 
+def _iceberg_keep(spark, meta, dfs, where, parts=None, bounds=None):
+    """The entries of ``dfs`` (an Iceberg snapshot's data files) that
+    `pruning.keep_files` keeps for ``where`` when it sees only the
+    given manifest partition values and bounds (all when it skips
+    nothing)."""
+    from prql_query_spark.engine.iceberg import (
+        _identity_part_fields, _table_schema)
+    from prql_query_spark.engine.pruning import keep_files
+
+    keep = keep_files(
+        spark, _table_schema(meta),
+        [c for c, _t in _identity_part_fields(meta)],
+        {p: ((parts or {}).get(p), *(bounds or {}).get(p, (None, None)))
+         for p, _s in dfs}, where)
+    return [t for t in dfs if keep is None or t[0] in keep]
+
+
+def _delta_keep(spark, schema, part_cols, adds, where):
+    """The add actions `pruning.keep_files` keeps for ``where`` (all
+    when it skips nothing)."""
+    from prql_query_spark.engine.deltalog import _prune_inputs
+    from prql_query_spark.engine.pruning import keep_files
+
+    keep = keep_files(spark, schema, part_cols, _prune_inputs(adds), where)
+    return {p: a for p, a in adds.items() if keep is None or p in keep}
+
+
 def test_iceberg_partitioned_write_and_manifest_pruning(spark, tmp_path):
     """Identity-partitioned Iceberg (r11): `write_iceberg(partition_by=)`
     stages hive-style so each data file holds ONE partition tuple with
@@ -6595,8 +6646,8 @@ def test_iceberg_partitioned_write_and_manifest_pruning(spark, tmp_path):
     import pytest as _pytest
 
     from prql_query_spark.engine.iceberg import (
-        IcebergError, _latest_metadata, _prune_data_files, _walk_manifests,
-        read_iceberg, write_iceberg,
+        IcebergError, _latest_metadata, _walk_manifests, read_iceberg,
+        write_iceberg,
     )
 
     d = str(tmp_path / "ice_part")
@@ -6623,13 +6674,12 @@ def test_iceberg_partitioned_write_and_manifest_pruning(spark, tmp_path):
     # manifest-level pruning: a 1-of-3 bucket predicate drops ~2/3 of
     # the files; date + composite predicates prune further; a predicate
     # over a NON-partition column falls back to the full list
-    p1 = _prune_data_files(spark, meta, dfs, parts, "bucket = 1")
+    p1 = _iceberg_keep(spark, meta, dfs, "bucket = 1", parts)
     assert 0 < len(p1) < len(dfs)
-    p2 = _prune_data_files(
-        spark, meta, dfs, parts, "bucket = 1 AND day = DATE'2024-01-02'")
+    p2 = _iceberg_keep(
+        spark, meta, dfs, "bucket = 1 AND day = DATE'2024-01-02'", parts)
     assert 0 < len(p2) < len(p1)
-    assert len(_prune_data_files(
-        spark, meta, dfs, parts, "id > 5")) == len(dfs)
+    assert len(_iceberg_keep(spark, meta, dfs, "id > 5", parts)) == len(dfs)
 
     # where-read == plain filtered read (pruning is only an optimization)
     got = sorted(r.id for r in read_iceberg(
@@ -6728,8 +6778,7 @@ def test_iceberg_partition_values_adversarial_roundtrip(spark, tmp_path):
     import json
 
     from prql_query_spark.engine.iceberg import (
-        _latest_metadata, _prune_data_files, _walk_manifests, read_iceberg,
-        write_iceberg,
+        _latest_metadata, _walk_manifests, read_iceberg, write_iceberg,
     )
 
     vals = ["plain", "has space", "a=b", "a/b", "100%", "naïve",
@@ -6756,12 +6805,9 @@ def test_iceberg_partition_values_adversarial_roundtrip(spark, tmp_path):
     # pruning evaluates through Spark SQL semantics: IS NULL hits only
     # the null dir; the empty string is NOT null; a nasty literal
     # prunes to its own single file
-    assert len(_prune_data_files(spark, meta, dfs, parts,
-                                 "s IS NULL")) == 1
-    assert len(_prune_data_files(spark, meta, dfs, parts,
-                                 "s = ''")) == 1
-    assert len(_prune_data_files(spark, meta, dfs, parts,
-                                 "s = 'a=b'")) == 1
+    assert len(_iceberg_keep(spark, meta, dfs, "s IS NULL", parts)) == 1
+    assert len(_iceberg_keep(spark, meta, dfs, "s = ''", parts)) == 1
+    assert len(_iceberg_keep(spark, meta, dfs, "s = 'a=b'", parts)) == 1
     assert read_iceberg(spark, d, where="s IS NULL").count() == 1
     assert read_iceberg(spark, d, where="s = ''").count() == 1
 
@@ -6872,14 +6918,13 @@ def test_iceberg_bounds_file_skipping(spark, tmp_path):
     """Manifest min/max bounds (r11): data files staged with disjoint
     key ranges are SKIPPED for out-of-range predicates straight from
     the manifest (the spec's lower/upper_bounds idea), conjuncts
-    compose with partition pruning, and everything non-conjunctive or
-    unparseable falls back conservatively — values always equal the
-    plain filtered read."""
+    compose with partition pruning, and an OR across columns falls
+    back conservatively — values always equal the plain filtered
+    read."""
     import json
 
     from prql_query_spark.engine.iceberg import (
-        _latest_metadata, _prune_by_bounds, _walk_manifests, read_iceberg,
-        write_iceberg,
+        _latest_metadata, _walk_manifests, read_iceberg, write_iceberg,
     )
 
     d = str(tmp_path / "ice_bounds")
@@ -6898,22 +6943,23 @@ def test_iceberg_bounds_file_skipping(spark, tmp_path):
     assert set(lo) >= {"id", "m", "x"}  # ints and doubles carry bounds
 
     # a narrow id range keeps ~1 file; a half-open range keeps ~half
-    few = _prune_by_bounds(spark, meta, dfs, bounds, "id >= 9000")
+    few = _iceberg_keep(spark, meta, dfs, "id >= 9000", bounds=bounds)
     assert 0 < len(few) <= 2
-    half = _prune_by_bounds(spark, meta, dfs, bounds,
-                            "id >= 5000 AND id < 6000")
+    half = _iceberg_keep(spark, meta, dfs, "id >= 5000 AND id < 6000",
+                         bounds=bounds)
     assert 0 < len(half) <= 2
-    eq = _prune_by_bounds(spark, meta, dfs, bounds, "id = 4242")
+    eq = _iceberg_keep(spark, meta, dfs, "id = 4242", bounds=bounds)
     assert len(eq) == 1
-    # conjuncts over non-bound predicates are ignored, never wrong
-    mixed = _prune_by_bounds(spark, meta, dfs, bounds,
-                             "id >= 9000 AND m = 3")
+    # conjuncts that no bound can narrow are ignored, never wrong
+    mixed = _iceberg_keep(spark, meta, dfs, "id >= 9000 AND m = 3",
+                          bounds=bounds)
     assert len(mixed) == len(few)
-    # OR / parens / IS NULL make the predicate unsplittable -> no skip
-    assert len(_prune_by_bounds(
-        spark, meta, dfs, bounds, "id >= 9000 OR m = 3")) == len(dfs)
-    assert len(_prune_by_bounds(
-        spark, meta, dfs, bounds, "(id >= 9000)")) == len(dfs)
+    # an OR across columns is no usable conjunct -> no skip; Spark's
+    # parser drops parentheses, so `(id >= 9000)` skips like the bare one
+    assert len(_iceberg_keep(spark, meta, dfs, "id >= 9000 OR m = 3",
+                             bounds=bounds)) == len(dfs)
+    assert 0 < len(_iceberg_keep(spark, meta, dfs, "(id >= 9000)",
+                                 bounds=bounds)) <= 2
 
     # end to end: pruned read values == plain filtered read
     for pred in ("id >= 9000", "id = 4242 AND m = 0",
@@ -6938,8 +6984,7 @@ def test_delta_stats_file_skipping(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from prql_query_spark.engine.deltalog import (
-        _skip_files_by_stats, _snapshot_actions, read_delta_snapshot,
-        write_delta,
+        _snapshot_actions, read_delta_snapshot, write_delta,
     )
 
     src = spark.range(0, 10_000).select(
@@ -6960,7 +7005,7 @@ def test_delta_stats_file_skipping(spark, tmp_path):
     assert sorted(st["minValues"]) == ["id", "m", "x"]
 
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    kept = _skip_files_by_stats(spark, schema, [], adds, "id >= 9000")
+    kept = _delta_keep(spark, schema, [], adds, "id >= 9000")
     assert 0 < len(kept) < len(adds)
 
     for pred in ("id >= 9000", "id = 4242 AND m = 0", "x < 10.5",
@@ -6978,7 +7023,7 @@ def test_delta_stats_file_skipping(spark, tmp_path):
             os.remove(os.path.join(d, "_delta_log", f))
     _m3, _p3, adds3, _t3 = _snapshot_actions(
         spark, os.path.join(d, "_delta_log"), None)
-    kept3 = _skip_files_by_stats(spark, schema, [], adds3, "id >= 9000")
+    kept3 = _delta_keep(spark, schema, [], adds3, "id >= 9000")
     assert 0 < len(kept3) < len(adds3)
     assert sorted(r.id for r in read_delta_snapshot(
         spark, d, where="id >= 9000").collect()) == list(range(9000, 10000))
@@ -6993,7 +7038,7 @@ def test_delta_stats_file_skipping(spark, tmp_path):
     meta2, _p2, adds2, _t2 = _snapshot_actions(
         spark, os.path.join(d2, "_delta_log"), None)
     schema2 = StructType.fromJson(json.loads(meta2["schemaString"]))
-    kept2 = _skip_files_by_stats(
+    kept2 = _delta_keep(
         spark, schema2, ["day"], adds2, "day = DATE'2024-01-03'")
     assert len(kept2) < len(adds2)
     got = sorted(r.id for r in read_delta_snapshot(
@@ -7013,12 +7058,11 @@ def test_compact_sort_by_enables_bounds_skipping(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from prql_query_spark.engine.deltalog import (
-        _skip_files_by_stats, _snapshot_actions, compact_delta,
-        read_delta_snapshot, write_delta,
+        _snapshot_actions, compact_delta, read_delta_snapshot, write_delta,
     )
     from prql_query_spark.engine.iceberg import (
-        _latest_metadata, _prune_by_bounds, _walk_manifests,
-        compact_iceberg, read_iceberg, write_iceberg,
+        _latest_metadata, _walk_manifests, compact_iceberg, read_iceberg,
+        write_iceberg,
     )
 
     # interleave ids across partitions: every file sees the full range
@@ -7036,7 +7080,7 @@ def test_compact_sort_by_enables_bounds_skipping(spark, tmp_path):
         snap = next(s for s in meta["snapshots"]
                     if s["snapshot-id"] == meta["current-snapshot-id"])
         dfs, _d, _p, bounds = _walk_manifests(snap, d)
-        return len(_prune_by_bounds(spark, meta, dfs, bounds, pred)), \
+        return len(_iceberg_keep(spark, meta, dfs, pred, bounds=bounds)), \
             len(dfs)
 
     kept, total = ice_kept()
@@ -7054,8 +7098,7 @@ def test_compact_sort_by_enables_bounds_skipping(spark, tmp_path):
         meta, _p, adds, _t = _snapshot_actions(
             spark, os.path.join(dd, "_delta_log"), None)
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        return len(_skip_files_by_stats(spark, schema, [], adds, pred)), \
-            len(adds)
+        return len(_delta_keep(spark, schema, [], adds, pred)), len(adds)
 
     kept, total = delta_kept()
     assert kept == total
@@ -7074,8 +7117,8 @@ def test_compact_sort_by_on_partitioned_iceberg(spark, tmp_path):
     import json
 
     from prql_query_spark.engine.iceberg import (
-        _latest_metadata, _prune_by_bounds, _prune_data_files,
-        _walk_manifests, compact_iceberg, read_iceberg, write_iceberg,
+        _latest_metadata, _walk_manifests, compact_iceberg, read_iceberg,
+        write_iceberg,
     )
 
     src = spark.range(0, 6000).select(
@@ -7091,13 +7134,46 @@ def test_compact_sort_by_on_partitioned_iceberg(spark, tmp_path):
     dfs, _dl, parts, bounds = _walk_manifests(snap, d)
     assert len(parts) == len(dfs) == len(bounds)
     pred = "b = 1 AND id >= 5000"
-    p1 = _prune_data_files(spark, meta, dfs, parts, pred)
+    p1 = _iceberg_keep(spark, meta, dfs, pred, parts)
     assert 0 < len(p1) < len(dfs)             # partition lever
-    p2 = _prune_by_bounds(spark, meta, p1, bounds, pred)
+    p2 = _iceberg_keep(spark, meta, dfs, pred, parts, bounds)
     assert 0 < len(p2) < len(p1)              # bounds lever on top
     got = sorted(r.id for r in
                  read_iceberg(spark, d, where=pred).collect())
     assert got == sorted(r.id for r in src.filter(pred).collect())
+
+
+def test_lakehouse_partition_predicates_match_filter(spark, tmp_path):
+    """Both jar-less readers on a table declared (p, d) and partitioned
+    by p: the declared column order reads back, a predicate where AND
+    binds tighter than OR returns the rows `df.filter` returns (a
+    textual split on `and` kept only the `p = 'y'` side), and a Delta
+    IN-list over the partition column skips files."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from prql_query_spark.engine.deltalog import (
+        _snapshot_actions, read_delta_snapshot, write_delta)
+    from prql_query_spark.engine.iceberg import read_iceberg, write_iceberg
+
+    src = spark.createDataFrame(
+        [("x", 1), ("y", 3), ("y", 10), ("z", 20)], "p string, d int")
+    ice, dlt = str(tmp_path / "t.iceberg"), str(tmp_path / "t.delta")
+    write_iceberg(src, ice, partition_by=["p"])
+    write_delta(src, dlt, partition_by=["p"])
+    pred = "p = 'x' or d > 5 and p = 'y'"
+    want = sorted(src.filter(pred).collect())
+    for read, path in ((read_iceberg, ice), (read_delta_snapshot, dlt)):
+        assert read(spark, path).columns == ["p", "d"], path
+        assert sorted(read(spark, path, where=pred).collect()) == want, path
+
+    meta, _p, adds, _t = _snapshot_actions(
+        spark, os.path.join(dlt, "_delta_log"), None)
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    kept = _delta_keep(spark, schema, ["p"], adds, "p IN ('x', 'z')")
+    assert sorted(os.path.dirname(p) for p in kept) == ["p%3Dx", "p%3Dz"]
 
 
 def test_lakehouse_metadata_introspection(spark, tmp_path):

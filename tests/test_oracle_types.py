@@ -45,11 +45,18 @@ def con():
     return c
 
 
+def _result_schema(con, sql):
+    """Arrow output schema of ``sql`` without computing its rows: DuckDB
+    fixes result types when it binds the query, so LIMIT 0 reports the
+    same types as the full result."""
+    return con.execute(f"SELECT * FROM ({sql}) LIMIT 0").arrow().schema
+
+
 @pytest.fixture(scope="module")
 def oracle_schemas(con):
-    """name -> Arrow output schema of every oracle, each executed in full
-    once and shared by the audits below."""
-    return {name: con.execute(sql).arrow().schema
+    """name -> Arrow output schema of every oracle, shared by the audits
+    below."""
+    return {name: _result_schema(con, sql)
             for name, sql in entrymod.oracle_sql().items()}
 
 
@@ -67,12 +74,13 @@ def test_no_oracle_returns_decimal(oracle_schemas):
 
 
 def test_gate_would_catch_uncast_int_sum(con):
-    """Negative control: prove the audit actually fires on the bug shape."""
-    tbl = con.execute(
-        "SELECT SUM(CASE WHEN o_totalprice > 0 THEN 1 ELSE 0 END) AS n "
-        "FROM orders"
-    ).arrow()
+    """Negative control: prove the audit actually fires on the bug shape,
+    both on the full result and through the audit's LIMIT 0 path."""
+    sql = ("SELECT SUM(CASE WHEN o_totalprice > 0 THEN 1 ELSE 0 END) AS n "
+           "FROM orders")
+    tbl = con.execute(sql).arrow()
     assert pa.types.is_decimal(tbl.schema.field("n").type)
+    assert pa.types.is_decimal(_result_schema(con, sql).field("n").type)
 
 
 def test_gate_would_catch_decimal_sum(con):

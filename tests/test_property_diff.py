@@ -327,55 +327,57 @@ def test_merge_upsert_matches_reference_semantics(spark, target, source):
     assert got_dlt == expected, (target, source, got_dlt)
 
 
-_bound_cols = ("a", "b")
-_file_rows = st.lists(
-    st.tuples(st.integers(-50, 50), st.integers(-50, 50)),
-    min_size=1, max_size=5)
-_file = st.tuples(_file_rows, st.booleans())  # (rows, has_stats)
-_conjunct = st.tuples(
-    st.sampled_from(_bound_cols),
-    st.sampled_from(["<", "<=", "=", ">=", ">"]),
-    st.integers(-55, 55))
+_cmp = st.sampled_from(["<", "<=", "=", ">=", ">"])
+_lit = st.integers(-55, 55)
+_atom = st.one_of(
+    st.builds("{} {} {}".format, st.sampled_from(["a", "b"]), _cmp, _lit),
+    st.builds("{} {} b".format, _lit, _cmp),
+    st.builds("a BETWEEN {} AND {}".format, _lit, _lit),
+    st.builds("p = '{}'".format, st.sampled_from("xyz")),
+    st.just("p IN ('x', 'y')"),
+    st.just("p IS NULL"))
+# unparenthesized AND/OR mixes exercise operator precedence
+_pred = st.recursive(_atom, lambda inner: st.one_of(
+    st.builds("{} AND {}".format, inner, inner),
+    st.builds("{} OR {}".format, inner, inner),
+    st.builds("NOT ({})".format, inner),
+    st.builds("({})".format, inner)), max_leaves=5)
+_file = st.tuples(
+    st.sampled_from(["x", "y", None]),                # partition value p
+    st.lists(st.tuples(st.integers(-50, 50), st.integers(-50, 50)),
+             min_size=1, max_size=5),                 # rows (a, b)
+    st.booleans())                                    # has stats
 
 
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(files=st.lists(_file, min_size=1, max_size=6),
-       conjuncts=st.lists(_conjunct, min_size=1, max_size=3))
-def test_conjunctive_keep_never_overprunes(spark, files, conjuncts):
+@given(files=st.lists(_file, min_size=1, max_size=6), where=_pred)
+def test_keep_files_never_overprunes(spark, files, where):
     """SOUNDNESS of the file-skipping engine (engine/pruning.py), the
-    one property that must never break: every file containing at least
-    one row satisfying the predicate MUST survive conjunctive_keep —
-    over-pruning is a silent-wrong-rows bug.  Files without stats must
-    always survive.  (Completeness — skipping as much as possible — is
-    an optimization, deliberately not asserted.)"""
-    from pyspark.sql.types import LongType
+    one property that must never break: every file holding at least
+    one row that Spark's own filter keeps MUST survive keep_files —
+    over-pruning is a silent-wrong-rows bug.  Files are partitioned by
+    ``p``, with or without (a, b) stats; predicates mix AND, OR, NOT,
+    parentheses and BETWEEN.  (Completeness — skipping as much as
+    possible — is an optimization, deliberately not asserted.)"""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
 
-    from prql_query_spark.engine.pruning import conjunctive_keep
+    from prql_query_spark.engine.pruning import keep_files
 
-    ops = {"<": lambda x, y: x < y, "<=": lambda x, y: x <= y,
-           "=": lambda x, y: x == y, ">=": lambda x, y: x >= y,
-           ">": lambda x, y: x > y}
-    where = " AND ".join(f"{c} {op} {lit}" for c, op, lit in conjuncts)
+    rows, meta = [], {}
+    for i, (p, file_rows, has_stats) in enumerate(files):
+        rows += [{"f": f"f{i}", "p": p, "a": a, "b": b} for a, b in file_rows]
+        a, b = zip(*file_rows)
+        bounds = ({"a": min(a), "b": min(b)}, {"a": max(a), "b": max(b)})
+        meta[f"f{i}"] = ({"p": p}, *(bounds if has_stats else (None, None)))
+    table = spark.createDataFrame(pa.Table.from_pylist(rows, schema=pa.schema(
+        [("f", pa.string()), ("p", pa.string()),
+         ("a", pa.int64()), ("b", pa.int64())])))
+    must_keep = {r.f for r in table.filter(where).select("f").collect()}
 
-    fb = {}
-    must_keep = set()
-    for i, (rows, has_stats) in enumerate(files):
-        key = f"f{i}"
-        if any(all(ops[op]({"a": ra, "b": rb}[c], lit)
-                   for c, op, lit in conjuncts)
-               for ra, rb in rows):
-            must_keep.add(key)
-        if has_stats:
-            fb[key] = (
-                {"a": min(r[0] for r in rows), "b": min(r[1] for r in rows)},
-                {"a": max(r[0] for r in rows), "b": max(r[1] for r in rows)})
-        else:
-            fb[key] = ({}, {})
-            must_keep.add(key)  # no stats -> must always survive
-
-    keep = conjunctive_keep(
-        spark, {"a": LongType(), "b": LongType()}, fb, where)
+    keep = keep_files(spark, StructType.fromDDL("p string, a long, b long"),
+                      ["p"], meta, where)
     if keep is None:
         return  # no skipping attempted: trivially sound
     assert must_keep <= keep, (where, files, sorted(keep))
